@@ -176,7 +176,7 @@ def main() -> None:
                 "sf": sf,
                 "triples": n_triples,
                 "triples_per_sec": round(n_triples / pipe_sec, 1) if pipe_sec else None,
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
                 "runs_per_query": 2,  # best-of-2: this host has external bursty load
             }
         )

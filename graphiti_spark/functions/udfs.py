@@ -61,47 +61,10 @@ def mentions_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pdf_out
 
 
-def triples_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            k: []
-            for k in (
-                "episode_uuid", "group_id", "ep_valid_at", "subject",
-                "predicate", "object", "fact", "valid_at", "invalid_at",
-                "triple_idx",
-            )
-        }
-        for ep_uuid, group, ts, content in zip(
-            pdf["episode_uuid"], pdf["group_id"], pdf["ep_valid_at"], pdf["content"]
-        ):
-            ref_time = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-            for t_idx, t in enumerate(extract_triples(content or "", ref_time)):
-                out["episode_uuid"].append(ep_uuid)
-                out["group_id"].append(group)
-                out["ep_valid_at"].append(ts)
-                out["subject"].append(t["subject"])
-                out["predicate"].append(t["predicate"])
-                out["object"].append(t["object"])
-                out["fact"].append(t["fact"])
-                out["valid_at"].append(t["valid_at"])
-                out["invalid_at"].append(t["invalid_at"])
-                out["triple_idx"].append(t_idx)
-        pdf_out = pd.DataFrame(out)
-        # arrow needs consistent dtypes for all-None timestamp columns
-        for c in ("valid_at", "invalid_at", "ep_valid_at"):
-            pdf_out[c] = pd.to_datetime(pdf_out[c], utc=True)
-        yield pdf_out
-
-
 def extract_mentions_df(episodes_df):
     """episodes(episode_uuid, group_id, ep_valid_at, content) -> RAW_MENTIONS."""
     cols = ["episode_uuid", "group_id", "ep_valid_at", "content"]
     return episodes_df.select(*cols).mapInPandas(mentions_map, schema=schemas.RAW_MENTIONS)
-
-
-def extract_triples_df(episodes_df):
-    cols = ["episode_uuid", "group_id", "ep_valid_at", "content"]
-    return episodes_df.select(*cols).mapInPandas(triples_map, schema=schemas.RAW_TRIPLES)
 
 
 # fused single-pass extraction: mentions AND triples from one scan of the

@@ -247,18 +247,9 @@ class GraphitiSpark:
         )
         existing = self.store.read("nodes") if self.store.exists("nodes") else None
         result = add_triplets(self.spark, trip, existing_nodes=existing)
-        nodes, edges = result["nodes"], result["edges"]
-        if self.with_embeddings:
-            # align with the embedding-carrying store schema (the batch
-            # pipeline embeds in its dedup stage; add_triplets does not)
-            from graphiti_spark.functions.udfs import embed_udf
-
-            if "name_embedding" not in nodes.columns:
-                nodes = nodes.withColumn("name_embedding", embed_udf(F.col("name")))
-            if "fact_embedding" not in edges.columns:
-                edges = edges.withColumn("fact_embedding", embed_udf(F.col("fact")))
-        self.store.merge_upsert("nodes", nodes, array_merge_cols=("aliases",))
-        self.store.merge_upsert("edges", edges, array_merge_cols=("episodes",))
+        self.store.merge_upsert("nodes", result["nodes"], array_merge_cols=("aliases",))
+        self.store.merge_upsert("edges", result["edges"], array_merge_cols=("episodes",))
+        result["release"]()
 
     def remove_episode(self, episode_uuid: str) -> None:
         """ref graphiti.py:1085-1113 cascade, applied to the store.

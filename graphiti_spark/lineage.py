@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,3 +104,14 @@ class StageRunner:
             {"stage": stage, "sec": round(time.time() - t0, 3), "rows": manifest["row_count"]}
         )
         return out
+
+    def run_concurrently(self, input_fingerprint: str, **builds) -> list[DataFrame]:
+        """Run mutually independent stages as concurrent actions from a
+        thread pool; outputs in argument order. Each job alone can't fill
+        the machine, and overlapping hides per-job scheduling barriers."""
+        with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+            futures = [
+                pool.submit(self.run, stage, input_fingerprint, build)
+                for stage, build in builds.items()
+            ]
+            return [f.result() for f in futures]

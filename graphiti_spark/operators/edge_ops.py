@@ -94,7 +94,7 @@ def dedup_edges(resolved_triples: DataFrame) -> DataFrame:
             F.col("w.valid_at").alias("valid_at"),
             F.col("w.invalid_at").alias("invalid_at"),
             # arrival-order tiebreaks (winner's episode + in-episode triple
-            # position): consumed by invalidate_contradictions to reproduce
+            # position): consumed by invalidation_map to reproduce
             # the oracle's sequential arrival semantics, dropped there
             F.col("w.episode_uuid").alias("arr_episode"),
             F.col("w.triple_idx").alias("arr_idx"),
@@ -232,18 +232,9 @@ def near_duplicate_edge_pairs(
     )
 
 
-# above this many judged pairs the driver union-find hands off to
-# distributed CC; 2M uuid pairs collect in ~250 MB and union-find in
-# seconds, and that serial cost is identical at every cluster size, while
-# iterative distributed CC at this size costs several shuffle rounds that
-# scale WORSE than the serial constant (measured on the 400k-page corpus)
-DRIVER_CC_CACHED_MAX = 2_000_000
-
-
 def near_dup_canonical_map(
     edges: DataFrame,
     cosine_threshold: float = EDGE_COSINE_THRESHOLD,
-    known_edge_count: int | None = None,
 ) -> tuple[DataFrame, int]:
     """T5/T10 judgment + union-find, WITHOUT the final rewrite: returns
     (canonical map (id, canonical), pair count). Split out from
@@ -252,20 +243,11 @@ def near_dup_canonical_map(
     so the pipeline computes it from the deduped table CONCURRENTLY with
     invalidation and applies it to the invalidated table afterwards.
 
-    Scale-adaptive on the pair DAG itself, not only on the CC algorithm:
-
-    - small input (known_edge_count <= SALT_FAST_PATH_MAX, or unknown): one
-      probe collect both fetches the pair list for the exact driver
-      union-find and yields the pair count — the whole stage is one job.
-    - large input: the probe would be wasted — a pair volume above the
-      probe cap means its limit() collect is thrown away and the full DAG
-      re-runs for persist+count (the limit's first wave is parallel now —
-      session.py sets spark.sql.limit.initialNumPartitions — but the
-      double execution remains). Instead
-      the pair DAG is persisted and counted ONCE at full parallelism;
-      the union-find then reads the cache — collected to the driver below
-      DRIVER_CC_CACHED_MAX (a cache scan + serial union-find, identical
-      cost at every cluster size), distributed min-label CC above it.
+    One probe collect fetches up to DRIVER_CC_MAX_PAIRS + 1 judged pairs:
+    when they all fit, the probe is both the pair list for the exact driver
+    union-find and the pair count — the whole stage is one job. Otherwise
+    the pair DAG is persisted, counted, and handed to distributed min-label
+    CC.
     """
     from graphiti_spark.operators.connected_components import (
         DRIVER_CC_MAX_PAIRS,
@@ -280,21 +262,6 @@ def near_dup_canonical_map(
         .filter(F.col("cos") >= cosine_threshold)
         .select(F.col("a_uuid").alias("a"), F.col("b_uuid").alias("b"))
     )
-    if known_edge_count is not None and known_edge_count > SALT_FAST_PATH_MAX:
-        pairs = pairs.persist()
-        n_pairs = pairs.count()
-        if n_pairs <= DRIVER_CC_CACHED_MAX:
-            rows = pairs.collect()
-            pairs.unpersist()
-            return (
-                _driver_cc_df(edges.sparkSession, [(r["a"], r["b"]) for r in rows]),
-                n_pairs,
-            )
-        canon = _distributed_cc(pairs)
-        # _distributed_cc checkpointed its output; the pair cache is consumed
-        pairs.unpersist()
-        return canon, n_pairs
-
     sample = pairs.limit(DRIVER_CC_MAX_PAIRS + 1).collect()
     if len(sample) <= DRIVER_CC_MAX_PAIRS:
         return (
@@ -408,8 +375,8 @@ def invalidation_map(
     Returns the per-uuid invalidation MAP (uuid, _self_min, _later_min) —
     only edges with at least one contradiction appear — WITHOUT touching
     the edge table itself; `apply_invalidation` folds it back in. Splitting
-    the two lets the pipeline keep the map (small) materialized while the
-    full-width edge table stays lazy all the way to the final write.
+    the two lets the pipeline materialize (or checkpoint) only the small
+    map, never a second full-width copy of the edge table.
 
     Contradiction domain (deterministic replacement of the reference's LLM
     judgment, SURVEY.md §2.4 T5): same (group_id, source, predicate),
@@ -594,13 +561,11 @@ def invalidate_contradictions(
     now_ts,
     num_salts: int = 8,
     hot_threshold: int = 10_000,
-    known_edge_count: int | None = None,
 ) -> DataFrame:
     """T6/T7 temporal invalidation — see `invalidation_map` for the full
     algebra and `apply_invalidation` for the fold-back. This wrapper keeps
-    the original one-call contract (used by the small-batch pipeline path,
-    add_triplets, and the oracle-parity tests)."""
-    inv = invalidation_map(edges, num_salts, hot_threshold, known_edge_count)
+    the one-call contract the driver-oracle entries use."""
+    inv = invalidation_map(edges, num_salts, hot_threshold)
     return apply_invalidation(edges, inv, now_ts)
 
 

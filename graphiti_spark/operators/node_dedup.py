@@ -324,9 +324,10 @@ def duplicate_pair_edges(resolution: DataFrame, now=None) -> DataFrame:
     reference also only writes pairs for the episode's extracted nodes).
 
     `canonical_name` mirrors build_canonical_nodes' norm_name (min
-    norm_exact over the component's resolution rows; for a new->existing
-    pair that is the min over the batch's names resolving there, the
-    established node's own name being already on the nodes table).
+    norm_exact over the component's resolution rows). For a new->existing
+    pair it is null, like `canonical_key_name`: the batch holds only some
+    of the established node's aliases, so their min is not its norm_name,
+    which lives on the nodes table.
 
     100 TB posture: input is the distinct-keys resolution table (orders of
     magnitude below |mentions|); one groupBy + equi-join on canonical_id,
@@ -359,7 +360,8 @@ def duplicate_pair_edges(resolution: DataFrame, now=None) -> DataFrame:
             F.col("canonical_id").alias("target_node_uuid"),
             F.lit("IS_DUPLICATE_OF").alias("name"),
             F.col("norm_exact").alias("duplicate_name"),
-            "canonical_name",
+            F.when(F.col("canonical_key_name").isNotNull(), F.col("canonical_name"))
+            .alias("canonical_name"),
             "canonical_key_name",
         )
     )

@@ -11,8 +11,13 @@ One Spark job reproduces the reference's 12-step bulk chain
                         T6/T7 invalidation ─> T5/T10 near-dup merge ─> edges
     nodes + mentions + edges ─ S6 ─> materialized tables (+ manifests)
 
-Stage boundaries checkpoint to parquet with lineage manifests so any stage
-resumes idempotently (lineage.StageRunner).
+The chain is eight lineage.StageRunner stages — extraction,
+name_resolution, nodes_canonical / edges_dedup / mentions (concurrent),
+edges_invalidate / edges_canon_map (concurrent), edges — and every batch
+runs all eight, whatever its size. In-memory mode persists each stage; with
+a checkpoint directory each stage writes parquet plus a lineage manifest so
+it resumes idempotently. `add_triplets` feeds hand-asserted triples into the
+same chain from name_resolution on.
 """
 
 from __future__ import annotations
@@ -35,15 +40,14 @@ from graphiti_spark.operators.edge_ops import (
     apply_edge_merge,
     apply_invalidation,
     dedup_edges,
-    invalidate_contradictions,
     invalidation_map,
-    merge_near_duplicate_edges,
     near_dup_canonical_map,
     rewrite_pointers,
 )
 from graphiti_spark.operators.node_dedup import (
     build_canonical_nodes,
     det_id_col,
+    duplicate_pair_edges,
     resolve_names,
 )
 
@@ -114,6 +118,10 @@ def run_pipeline(
     """Full batch ingest. Returns dict with episodes/nodes/edges/mentions
     DataFrames plus per-stage metrics.
 
+    Every batch runs the eight stages named in the module docstring, in
+    memory (`checkpoint_dir=None`) or durably; each `metrics` row comes
+    from one StageRunner.run call.
+
     With a `registry` (ontology.TypeRegistry) the edge_type_map is enforced
     on the canonical edges and E5/E6 attribute rules fill the node/edge
     `attributes` maps (ref graphiti.py:393-397 + the per-type attribute
@@ -143,7 +151,50 @@ def run_pipeline(
         "extraction", in_fp, lambda: extract_all_df(episodes, reflexion=reflexion)
     )
     raw_mentions, raw_triples = split_extraction(raw_all)
+    out = _resolve_and_assemble(
+        runner, in_fp, raw_mentions, raw_triples, now,
+        with_embeddings=with_embeddings, existing_nodes=existing_nodes,
+        registry=registry,
+    )
 
+    # episode.entity_edges: uuids of edges whose provenance includes the
+    # episode (ref graphiti.py:544-546) — lazy; computed if consumed
+    ep_edges = (
+        out["edges"]
+        .select(F.col("uuid").alias("edge_uuid"), F.explode("episodes").alias("episode_uuid"))
+        .groupBy("episode_uuid")
+        .agg(F.sort_array(F.collect_list("edge_uuid")).alias("entity_edges"))
+    )
+    episodes_out = episodes.join(ep_edges, on="episode_uuid", how="left").withColumn(
+        "entity_edges", F.coalesce(F.col("entity_edges"), F.array().cast("array<string>"))
+    )
+
+    return {
+        **out,
+        "episodes_with_edges": episodes_out,
+        "episodes": episodes,
+        "raw_mentions": raw_mentions,
+        "raw_triples": raw_triples,
+        # lazy derivation of the materialized resolution table — consumed
+        # by callers that persist the IS_DUPLICATE_OF provenance
+        "duplicate_pairs": duplicate_pair_edges(out["name_resolution"], now=now),
+    }
+
+
+def _resolve_and_assemble(
+    runner: StageRunner,
+    in_fp: str,
+    raw_mentions: DataFrame,
+    raw_triples: DataFrame,
+    now: datetime,
+    with_embeddings: bool,
+    existing_nodes: DataFrame | None = None,
+    registry=None,
+) -> dict:
+    """The resolve -> dedup -> invalidate -> merge chain shared by
+    run_pipeline and add_triplets (the reference runs one chain for both,
+    graphiti.py:584-870 and :1018-1083). Returns name_resolution / nodes /
+    edges / mentions plus the runner's metrics and a `release` handle."""
     # D1-D14 global canonicalization
     name_resolution = runner.run(
         "name_resolution",
@@ -154,15 +205,13 @@ def run_pipeline(
     )
 
     resolved_triples = rewrite_pointers(raw_triples, name_resolution)
-    # dedup / invalidation / merge are separate stages: invalidation and
-    # merge both self-join their input, so each table must be
-    # materialized first or the whole upstream DAG runs twice.
-    # With embeddings requested they are computed once in the dedup stage
-    # and reused by the merge judgment and the final table; without them
-    # (P/R tests) the merge embeds only edges sharing an endpoint pair —
-    # singleton pairs can never merge, and at web scale that is almost
-    # all of them.
-    n_parts = spark.sparkContext.defaultParallelism * 2
+    # edges_dedup is materialized because invalidation and the near-dup
+    # merge both self-join it. With embeddings requested they are computed
+    # once here and reused by the merge judgment and the final table;
+    # without them (P/R tests) the merge embeds only edges sharing an
+    # endpoint pair — singleton pairs can never merge, and at web scale
+    # that is almost all of them.
+    n_parts = runner.spark.sparkContext.defaultParallelism * 2
 
     def _build_deduped():
         d = dedup_edges(resolved_triples)
@@ -180,48 +229,13 @@ def run_pipeline(
         return d
 
     # nodes / edge-dedup / mentions only consume already-materialized
-    # stages and are mutually independent. For SMALL inputs they run as
-    # concurrent actions from a thread pool: each job alone can't fill the
-    # machine, so overlapping hides per-job scheduling barriers. For LARGE
-    # inputs every stage saturates all cores by itself — interleaving three
-    # shuffle-heavy jobs only thrashes cache and shuffle I/O (measured:
-    # 1.57x wave speedup at 4x cores vs ~3x for the sequential stages), so
-    # they run back to back.
-    build_nodes = lambda: build_canonical_nodes(name_resolution, raw_mentions)  # noqa: E731
-    build_ments = lambda: build_mentions_table(raw_mentions, name_resolution)  # noqa: E731
-    if runner.rows.get("extraction", 0) < 1_000_000:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_nodes = pool.submit(runner.run, "nodes_canonical", in_fp, build_nodes)
-            f_deduped = pool.submit(runner.run, "edges_dedup", in_fp, _build_deduped)
-            f_mentions = pool.submit(runner.run, "mentions", in_fp, build_ments)
-            nodes = f_nodes.result()
-            deduped = f_deduped.result()
-            mentions = f_mentions.result()
-    else:
-        deduped = runner.run("edges_dedup", in_fp, _build_deduped)
-        if runner.dir is None and registry is None:
-            # large in-memory path: nodes and mentions are consumed exactly
-            # once (by the caller's table write) and nothing downstream
-            # reads them, so their eager persist+count here would be two
-            # pure-overhead barriers. Left lazy, their computation runs
-            # INSIDE the caller's concurrent nodes/edges/mentions write —
-            # overlapping with the edge-assembly write on cores the single
-            # write jobs can't fill. (With a `registry` nodes feeds two
-            # consumers — edge-type enforcement and attribute fill — so it
-            # must stay materialized; durable mode checkpoints every stage.)
-            nodes = build_nodes()
-            mentions = build_ments()
-            runner.metrics.append(
-                {"stage": "nodes_canonical", "sec": 0.0, "rows": None, "lazy": True}
-            )
-            runner.metrics.append(
-                {"stage": "mentions", "sec": 0.0, "rows": None, "lazy": True}
-            )
-        else:
-            nodes = runner.run("nodes_canonical", in_fp, build_nodes)
-            mentions = runner.run("mentions", in_fp, build_ments)
+    # stages and are mutually independent
+    nodes, deduped, mentions = runner.run_concurrently(
+        in_fp,
+        nodes_canonical=lambda: build_canonical_nodes(name_resolution, raw_mentions),
+        edges_dedup=_build_deduped,
+        mentions=lambda: build_mentions_table(raw_mentions, name_resolution),
+    )
 
     # Invalidation BEFORE near-dup merge, matching the oracle (oracle.py:169
     # invalidates at arrival over the full pre-merge edge set, then merges):
@@ -229,84 +243,38 @@ def run_pipeline(
     # for an edge with a different target, and the canonical edge must carry
     # temporal columns computed against that full set.
     #
-    # The near-dup canonical map depends only on columns invalidation never
-    # touches (uuid, endpoints, fact embeddings), so it is computed from the
-    # deduped table CONCURRENTLY with invalidation — the two heaviest jobs
-    # overlap — and applied to the invalidated table afterwards. Result is
-    # identical to merge_near_duplicate_edges(invalidated).
-    build_inv = lambda: invalidate_contradictions(  # noqa: E731
-        deduped, now, known_edge_count=runner.rows.get("edges_dedup")
+    # Both stages materialize only a SMALL map: the per-uuid invalidation
+    # map and the near-dup canonical map. They derive from the deduped
+    # table and touch disjoint columns (invalidation never changes uuid,
+    # endpoints or fact embeddings), so they run concurrently. The
+    # full-width edge table is never cached again after edges_dedup:
+    # invalidation folds in through a broadcast join and the merge chains
+    # on top, materialized once by the `edges` stage. The result is
+    # identical to merge_near_duplicate_edges(invalidate_contradictions(.)).
+    inv_map, canon = runner.run_concurrently(
+        in_fp,
+        edges_invalidate=lambda: invalidation_map(
+            deduped,
+            known_edge_count=runner.rows["edges_dedup"],
+            cache_registry=runner.persisted,
+        ),
+        edges_canon_map=lambda: near_dup_canonical_map(deduped)[0],
     )
 
-    # the canonical map is a real runner stage (resumable in durable mode);
-    # apply_edge_merge's broadcast-vs-shuffle gate uses its materialized row
-    # count — the map size is exactly what the gate is about
-    def _build_canon():
-        canon, _ = near_dup_canonical_map(
-            deduped, known_edge_count=runner.rows.get("edges_dedup")
-        )
-        return canon
-
-    if runner.dir is not None:
-        # durable mode keeps every stage as a resumable parquet checkpoint
-        invalidated = runner.run("edges_invalidate", in_fp, build_inv)
-        canon = runner.run("edges_canon_map", in_fp, _build_canon)
-        edges = runner.run(
-            "edges",
-            in_fp,
-            lambda: apply_edge_merge(invalidated, canon, runner.rows["edges_canon_map"]),
-        )
-    else:
-        # in-memory path (any size): only the SMALL invalidation map
-        # materializes; the full-width edge table is never cached again
-        # after edges_dedup — invalidation folds in via a broadcast join
-        # and the near-dup merge chains on top lazily. Re-caching the
-        # 128-float embedding column is memory-bandwidth-bound — the one
-        # resource a bigger cluster does scale that a wider single box
-        # does not — so skipping two full-width cache passes here is what
-        # keeps N-vs-4N efficiency at the north-rule bar (and at small
-        # batch sizes it removes one whole persist+count barrier). The
-        # invalidation map and the near-dup canonical map both derive from
-        # the cached dedup output and touch disjoint columns, so they run
-        # CONCURRENTLY — each alone is a chain of shuffle jobs with
-        # scheduling barriers that leave cores idle.
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _timed_inv():
-            t0 = _time.time()
-            m = invalidation_map(
-                deduped,
-                known_edge_count=runner.rows.get("edges_dedup"),
-                cache_registry=runner.persisted,
-            ).persist()
-            runner.persisted.append(m)
-            n = m.count()
-            runner.metrics.append(
-                {"stage": "edges_invalidate", "sec": round(_time.time() - t0, 3), "rows": n}
-            )
-            return m, n
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_inv = pool.submit(_timed_inv)
-            f_canon = pool.submit(runner.run, "edges_canon_map", in_fp, _build_canon)
-            inv_map, n_inv = f_inv.result()
-            canon = f_canon.result()
-        invalidated = apply_invalidation(
-            deduped, inv_map, now, broadcast_map=n_inv <= INV_MAP_BROADCAST_MAX
-        )
-        merged = apply_edge_merge(invalidated, canon, runner.rows["edges_canon_map"])
-        if runner.rows.get("edges_dedup", 0) < 1_000_000:
-            # small batches: the driver entries / P/R gate read the edge
-            # table several times, so one cheap materialization pays off
-            edges = runner.run("edges", in_fp, lambda: merged)
-        else:
-            # large batches: the caller's table write is the first (and
-            # only) full materialization of the output
-            edges = merged
-            runner.metrics.append(
-                {"stage": "edges", "sec": 0.0, "rows": None, "lazy": True}
-            )
+    # the gates use the materialized map sizes: the broadcast decisions are
+    # exactly about how big each map is
+    edges = runner.run(
+        "edges",
+        in_fp,
+        lambda: apply_edge_merge(
+            apply_invalidation(
+                deduped, inv_map, now,
+                broadcast_map=runner.rows["edges_invalidate"] <= INV_MAP_BROADCAST_MAX,
+            ),
+            canon,
+            runner.rows["edges_canon_map"],
+        ),
+    )
 
     if with_embeddings:
         # edges already carry fact_embedding from the edges_dedup stage
@@ -324,28 +292,8 @@ def run_pipeline(
         )
         nodes = fill_node_attributes(nodes, edges, registry)
 
-    # episode.entity_edges: uuids of edges whose provenance includes the
-    # episode (ref graphiti.py:544-546) — lazy; computed if consumed
-    ep_edges = (
-        edges.select(F.col("uuid").alias("edge_uuid"), F.explode("episodes").alias("episode_uuid"))
-        .groupBy("episode_uuid")
-        .agg(F.sort_array(F.collect_list("edge_uuid")).alias("entity_edges"))
-    )
-    episodes_out = episodes.join(ep_edges, on="episode_uuid", how="left").withColumn(
-        "entity_edges", F.coalesce(F.col("entity_edges"), F.array().cast("array<string>"))
-    )
-
-    from graphiti_spark.operators.node_dedup import duplicate_pair_edges
-
     return {
-        "episodes_with_edges": episodes_out,
-        "episodes": episodes,
-        "raw_mentions": raw_mentions,
-        "raw_triples": raw_triples,
         "name_resolution": name_resolution,
-        # lazy derivation of the materialized resolution table — consumed
-        # by callers that persist the IS_DUPLICATE_OF provenance
-        "duplicate_pairs": duplicate_pair_edges(name_resolution, now=now),
         "nodes": nodes,
         "edges": edges,
         "mentions": mentions,
@@ -355,8 +303,6 @@ def run_pipeline(
         # after the outputs are materialized (written/collected). Without
         # it a long-lived session accumulates per-batch cache blocks
         # (streaming foreachBatch, notebooks).
-        # localCheckpointed frames release through the same unpersist call
-        # (their blocks are ordinary cache blocks pinned by the RDD)
         "release": lambda: [df.unpersist() for df in runner.persisted],
     }
 
@@ -369,11 +315,13 @@ def add_triplets(
 ) -> dict:
     """Manual triple ingestion (ref graphiti.py:1018-1083 `add_triplet`),
     generalized to a batch: triplets(group_id, subject, predicate, object
-    [, fact, valid_at]) run the same resolve -> canonicalize -> dedup ->
-    merge -> invalidate chain as extracted triples, so a hand-asserted fact
-    is indistinguishable from an extracted one. With `existing_nodes` the
-    names resolve against the current graph (D11) exactly like a streaming
-    micro-batch. Returns {nodes, edges, mentions} frames for merge_upsert.
+    [, fact, valid_at]) become one mention per endpoint and one raw triple
+    each, then run run_pipeline's own post-extraction chain (with fact and
+    name embeddings), so a hand-asserted fact is indistinguishable from an
+    extracted one. With `existing_nodes` the names resolve against the
+    current graph (D11) exactly like a streaming micro-batch. Returns
+    {nodes, edges, mentions} frames for merge_upsert plus metrics and a
+    `release` handle.
     """
     now = now or datetime.now(timezone.utc)
     t = triplets
@@ -394,42 +342,15 @@ def add_triplets(
         )
         .withColumn("triple_idx", F.lit(0).cast("long"))
     )
-    m = (
-        t.select(
-            "episode_uuid", "group_id", "ep_valid_at",
-            F.col("subject").alias("name"),
-            F.lit("Entity").alias("entity_type"),
-            F.lit(0).cast("long").alias("mention_idx"),
-        )
-        .unionByName(
-            t.select(
-                "episode_uuid", "group_id", "ep_valid_at",
-                F.col("object").alias("name"),
-                F.lit("Entity").alias("entity_type"),
-                F.lit(1).cast("long").alias("mention_idx"),
-            )
-        )
-        .persist()
+    # one mention per endpoint: subject is mention 0, object mention 1
+    m = t.select(
+        "episode_uuid", "group_id", "ep_valid_at",
+        F.posexplode(F.array("subject", "object")).alias("mention_idx", "name"),
+    ).withColumn("entity_type", F.lit("Entity"))
+    return _resolve_and_assemble(
+        StageRunner(spark, None), "triplets", m, t, now,
+        with_embeddings=True, existing_nodes=existing_nodes,
     )
-    caches: list[DataFrame] = [m]
-    name_resolution = resolve_names(m, existing_nodes, cache_registry=caches).persist()
-    caches.append(name_resolution)
-    nodes = build_canonical_nodes(name_resolution, m)
-    deduped = (
-        dedup_edges(rewrite_pointers(t, name_resolution))
-        .withColumn("fact_embedding", embed_udf(F.col("fact")))
-        .persist()
-    )
-    caches.append(deduped)
-    edges = merge_near_duplicate_edges(invalidate_contradictions(deduped, now))
-    mentions = build_mentions_table(m, name_resolution)
-    return {
-        "nodes": nodes,
-        "edges": edges,
-        "mentions": mentions,
-        "now": now,
-        "release": lambda: [df.unpersist() for df in caches],
-    }
 
 
 def spark_triple_set(result: dict) -> set[tuple]:

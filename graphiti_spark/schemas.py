@@ -116,7 +116,7 @@ DUPLICATE_PAIRS = StructType(
         StructField("target_node_uuid", StringType(), False),  # canonical
         StructField("name", StringType(), False),  # IS_DUPLICATE_OF
         StructField("duplicate_name", StringType(), False),
-        StructField("canonical_name", StringType(), False),
+        StructField("canonical_name", StringType(), True),  # null: existing canonical
         StructField("canonical_key_name", StringType(), True),
         StructField("created_at", TimestampType(), True),
     ]
@@ -143,22 +143,6 @@ RAW_MENTIONS = StructType(
         StructField("name", StringType(), False),
         StructField("entity_type", StringType(), False),
         StructField("mention_idx", LongType(), False),
-    ]
-)
-
-# intermediate: one row per extracted triple (pre-resolution)
-RAW_TRIPLES = StructType(
-    [
-        StructField("episode_uuid", StringType(), False),
-        StructField("group_id", StringType(), False),
-        StructField("ep_valid_at", TimestampType(), False),
-        StructField("subject", StringType(), False),
-        StructField("predicate", StringType(), False),
-        StructField("object", StringType(), False),
-        StructField("fact", StringType(), False),
-        StructField("valid_at", TimestampType(), True),
-        StructField("invalid_at", TimestampType(), True),
-        StructField("triple_idx", LongType(), False),
     ]
 )
 

@@ -47,13 +47,22 @@ class ParquetStore:
             # a partitioned write of an EMPTY frame leaves a directory with
             # no data files (only _SUCCESS), which defeats schema inference
             # — possible for tables that can legitimately be empty on a
-            # batch (e.g. duplicate_pairs when nothing deduped). Fall back
-            # to the canonical empty frame for known tables.
+            # batch (e.g. duplicate_pairs when nothing deduped). Only that
+            # case falls back to the canonical empty frame: a table WITH
+            # data files that fails to read is corrupt, and merge_upsert
+            # must not overwrite it with the new batch alone.
             from graphiti_spark.schemas import STORE_TABLES
 
-            if table in STORE_TABLES:
+            if table in STORE_TABLES and not self._has_data_files(table):
                 return self.spark.createDataFrame([], schema=STORE_TABLES[table])
             raise
+
+    def _has_data_files(self, table: str) -> bool:
+        return any(
+            f.endswith(".parquet") and not f.startswith(("_", "."))
+            for _, _, files in os.walk(self.path(table))
+            for f in files
+        )
 
     def recover(self, table: str) -> None:
         """Crash recovery for merge_upsert's two commit protocols.

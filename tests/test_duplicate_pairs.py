@@ -78,8 +78,10 @@ def test_duplicate_pairs_incremental_points_at_existing(spark):
     p = pairs[0]
     assert p.target_node_uuid == ex_uuid
     assert p.duplicate_name == "acme-labs"
-    # the established node's own key name is not in this batch's resolution
+    # the established node's own key name is not in this batch's resolution,
+    # and the batch's names are not its norm_name either
     assert p.canonical_key_name is None
+    assert p.canonical_name is None
 
 
 def test_pipeline_exposes_duplicate_pairs(spark):

@@ -59,7 +59,6 @@ def _edge_tuples(result) -> set:
 def _force_distributed(monkeypatch):
     monkeypatch.setattr(node_dedup, "DRIVER_FUZZY_MAX_KEYS", 0)
     monkeypatch.setattr(cc_mod, "DRIVER_CC_MAX_PAIRS", 0)
-    monkeypatch.setattr(edge_ops, "DRIVER_CC_CACHED_MAX", 0)
     monkeypatch.setattr(edge_ops, "SALT_FAST_PATH_MAX", 0)
 
 

@@ -52,6 +52,22 @@ def test_checkpoint_resume_skips_stages(spark, tmp_path):
     assert r3["mentions"].count() == n_mentions_1
 
 
+def test_durable_edges_match_in_memory(spark, tmp_path):
+    """Durable and in-memory mode run the same stage chain: identical full
+    edge tuples, temporal columns included. The durable edges_invalidate
+    checkpoint holds the invalidation map, not a copy of the edge table."""
+    from test_forced_distributed import _edge_tuples
+
+    ck = str(tmp_path / "stages")
+    pages = _pages(spark)
+    in_memory = _edge_tuples(run_pipeline(spark, pages, now=NOW))
+    durable = _edge_tuples(run_pipeline(spark, pages, now=NOW, checkpoint_dir=ck))
+    assert durable == in_memory
+    assert any(t[-1] is not None for t in durable)  # invalidation fired
+    inv = spark.read.parquet(os.path.join(ck, "edges_invalidate"))
+    assert sorted(inv.columns) == ["_later_min", "_self_min", "uuid"]
+
+
 def test_episode_entity_edges(spark):
     pages = _pages(spark)
     res = run_pipeline(spark, pages, now=NOW, with_embeddings=False)

@@ -127,18 +127,14 @@ def test_zero_norm_embeddings_never_match(spark):
     assert got == []
 
 
-def test_canonical_map_large_input_path_matches_probe_path(spark):
-    """near_dup_canonical_map's large-input branch (known_edge_count above
-    SALT_FAST_PATH_MAX skips the probe, persists the pair DAG once, and
-    collects the union-find input from cache) must produce the identical
-    canonical map as the small-input probe branch."""
+def test_canonical_map_probe_path(spark):
+    """near_dup_canonical_map's probe collect feeds the driver union-find:
+    near-duplicate facts merge only within their own endpoint pair, the
+    min uuid is canonical, and the pair count is the judged pairs."""
     from datetime import datetime, timezone
 
     from graphiti_spark.extraction import embed_text
-    from graphiti_spark.operators.edge_ops import (
-        SALT_FAST_PATH_MAX,
-        near_dup_canonical_map,
-    )
+    from graphiti_spark.operators.edge_ops import near_dup_canonical_map
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
@@ -160,12 +156,7 @@ def test_canonical_map_large_input_path_matches_probe_path(spark):
         "episodes array<string>, created_at timestamp, valid_at timestamp, "
         "invalid_at timestamp, fact_embedding array<float>",
     )
-    canon_probe, n_probe = near_dup_canonical_map(edges)
-    canon_large, n_large = near_dup_canonical_map(
-        edges, known_edge_count=SALT_FAST_PATH_MAX + 1
-    )
-    got_probe = sorted(tuple(r) for r in canon_probe.collect())
-    got_large = sorted(tuple(r) for r in canon_large.collect())
-    assert got_probe == got_large
-    assert n_probe == n_large == 2
-    assert got_large == [("e1", "e1"), ("e2", "e1"), ("e4", "e4"), ("e5", "e4")]
+    canon, n_pairs = near_dup_canonical_map(edges)
+    assert n_pairs == 2
+    got = sorted(tuple(r) for r in canon.collect())
+    assert got == [("e1", "e1"), ("e2", "e1"), ("e4", "e4"), ("e5", "e4")]

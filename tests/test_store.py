@@ -192,6 +192,41 @@ def test_merge_upsert_null_group_falls_back_to_full_merge(spark, tmp_path):
     assert rows == {"u1": ("ga", 1), "u2": (None, 2), "u3": (None, 3)}
 
 
+def test_corrupt_table_raises_on_read_and_merge(spark, tmp_path):
+    """Only a table with NO data files reads as the canonical empty frame:
+    a truncated part file raises on read AND on merge_upsert, which must
+    not overwrite the table with the new batch alone."""
+    import os
+
+    import pytest
+
+    store = ParquetStore(spark, str(tmp_path))
+    row = spark.createDataFrame(
+        [("u1", "g", "m1", "n1", ts(1))],
+        schema="uuid string, group_id string, source_node_uuid string, "
+        "target_node_uuid string, created_at timestamp",
+    )
+    store.merge_upsert("mentions", row.coalesce(1))
+    parts = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(store.path("mentions"))
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert len(parts) == 1
+    with open(parts[0], "r+b") as f:
+        f.truncate(os.path.getsize(parts[0]) // 2)
+    with pytest.raises(Exception):
+        store.read("mentions").collect()
+    with pytest.raises(Exception):
+        store.merge_upsert("mentions", row.withColumn("uuid", F.lit("u2")))
+    assert os.path.getsize(parts[0]) > 0  # the corrupt file was not replaced
+
+    # a table directory with no data files still reads as the empty frame
+    os.remove(parts[0])
+    assert store.read("mentions").count() == 0
+
+
 def test_iceberg_sort_order_sql():
     from graphiti_spark.store import IcebergStore
 
