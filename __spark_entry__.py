@@ -69,22 +69,60 @@ def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_PIPELINE_MEMO: dict = {}
+# one pipeline run per (kind, Spark application, sf_dir): the stage outputs
+# are persisted DataFrames tied to the session, so a new session (even one
+# reusing the old object's id) never sees another application's result
+_MEMO: dict = {}
+
+
+def _memo(kind: str, spark: SparkSession, sf_dir: str, build: Callable[[], dict]) -> dict:
+    key = (kind, spark.sparkContext.applicationId, sf_dir)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def _pipeline_result(spark: SparkSession, sf_dir: str) -> dict:
-    """The kg_* queries share one pipeline run per (session, sf_dir) —
-    the stage outputs are persisted DataFrames tied to the session."""
+    """The kg_* queries share one pipeline run over the generated pages."""
     from graphiti_spark.pipeline import run_pipeline
 
-    key = (id(spark), sf_dir)
-    if key not in _PIPELINE_MEMO:
-        _PIPELINE_MEMO[key] = run_pipeline(spark, _pages_df(spark, sf_dir), now=_FIXED_NOW)
-    return _PIPELINE_MEMO[key]
+    return _memo(
+        "pipeline", spark, sf_dir,
+        lambda: run_pipeline(spark, _pages_df(spark, sf_dir), now=_FIXED_NOW),
+    )
 
 
-def _kg_pipeline_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    result = _pipeline_result(spark, sf_dir)
+def _closed_result(spark: SparkSession, sf_dir: str) -> dict:
+    """One closed-form pipeline run shared by the kg_*_closed entries."""
+    from graphiti_spark.datagen import closed_form_pages
+    from graphiti_spark.pipeline import run_pipeline
+
+    return _memo(
+        "closed", spark, sf_dir,
+        lambda: run_pipeline(
+            spark, closed_form_pages(_t(spark, sf_dir, "orders")),
+            now=_FIXED_NOW, with_embeddings=False,
+        ),
+    )
+
+
+def _closed_fuzzy_result(spark: SparkSession, sf_dir: str) -> dict:
+    """One fuzzy-variant closed-form pipeline run."""
+    from graphiti_spark.datagen import closed_form_pages_fuzzy
+    from graphiti_spark.pipeline import run_pipeline
+
+    return _memo(
+        "closed_fuzzy", spark, sf_dir,
+        lambda: run_pipeline(
+            spark, closed_form_pages_fuzzy(_t(spark, sf_dir, "orders")),
+            now=_FIXED_NOW, with_embeddings=False,
+        ),
+    )
+
+
+def _edge_rows(result: dict) -> DataFrame:
+    """A pipeline result's canonical edges as oracle-comparable rows:
+    endpoint names, predicate, fact and the T6/T7 times in epoch us."""
     nodes = result["nodes"].select("uuid", "norm_name")
     return (
         result["edges"]
@@ -112,22 +150,8 @@ def _kg_pipeline_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLOSED_MEMO: dict = {}
-
-
-def _closed_result(spark: SparkSession, sf_dir: str) -> dict:
-    """One closed-form pipeline run shared by the kg_*_closed entries."""
-    from graphiti_spark.datagen import closed_form_pages
-    from graphiti_spark.pipeline import run_pipeline
-
-    key = (id(spark), sf_dir)
-    if key not in _CLOSED_MEMO:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        pages = closed_form_pages(_t(spark, sf_dir, "orders"))
-        _CLOSED_MEMO[key] = run_pipeline(
-            spark, pages, now=_FIXED_NOW, with_embeddings=False
-        )
-    return _CLOSED_MEMO[key]
+def _kg_pipeline_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _edge_rows(_pipeline_result(spark, sf_dir))
 
 
 def _kg_pipeline_edges_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,50 +164,7 @@ def _kg_pipeline_edges_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge merge) provably fire on ZERO pairs (tests/test_closed_oracle.py
     asserts both), so the DuckDB twin below recomputes the full canonical
     edge table — rows, schema, values — from `orders` alone."""
-    result = _closed_result(spark, sf_dir)
-    nodes = result["nodes"].select("uuid", "norm_name")
-    return (
-        result["edges"]
-        .join(
-            nodes.withColumnRenamed("uuid", "source_node_uuid").withColumnRenamed(
-                "norm_name", "subj_name"
-            ),
-            on="source_node_uuid",
-        )
-        .join(
-            nodes.withColumnRenamed("uuid", "target_node_uuid").withColumnRenamed(
-                "norm_name", "obj_name"
-            ),
-            on="target_node_uuid",
-        )
-        .select(
-            "group_id",
-            "subj_name",
-            F.col("name").alias("predicate"),
-            "obj_name",
-            "norm_fact",
-            F.unix_micros("valid_at").alias("valid_us"),
-            F.unix_micros("invalid_at").alias("invalid_us"),
-        )
-    )
-
-
-_CLOSED_FUZZY_MEMO: dict = {}
-
-
-def _closed_fuzzy_result(spark: SparkSession, sf_dir: str) -> dict:
-    """One fuzzy-variant closed-form pipeline run per (session, sf_dir)."""
-    from graphiti_spark.datagen import closed_form_pages_fuzzy
-    from graphiti_spark.pipeline import run_pipeline
-
-    key = (id(spark), sf_dir)
-    if key not in _CLOSED_FUZZY_MEMO:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        pages = closed_form_pages_fuzzy(_t(spark, sf_dir, "orders"))
-        _CLOSED_FUZZY_MEMO[key] = run_pipeline(
-            spark, pages, now=_FIXED_NOW, with_embeddings=False
-        )
-    return _CLOSED_FUZZY_MEMO[key]
+    return _edge_rows(_closed_result(spark, sf_dir))
 
 
 def _kg_pipeline_edges_fuzzy_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,32 +180,7 @@ def _kg_pipeline_edges_fuzzy_closed(spark: SparkSession, sf_dir: str) -> DataFra
     the MERGED node identities; the DuckDB twin replays all of it from
     `orders` alone (tests/test_closed_oracle_fuzzy.py pins the pair set
     and the edge near-dup leg's zero-candidate invariant)."""
-    result = _closed_fuzzy_result(spark, sf_dir)
-    nodes = result["nodes"].select("uuid", "norm_name")
-    return (
-        result["edges"]
-        .join(
-            nodes.withColumnRenamed("uuid", "source_node_uuid").withColumnRenamed(
-                "norm_name", "subj_name"
-            ),
-            on="source_node_uuid",
-        )
-        .join(
-            nodes.withColumnRenamed("uuid", "target_node_uuid").withColumnRenamed(
-                "norm_name", "obj_name"
-            ),
-            on="target_node_uuid",
-        )
-        .select(
-            "group_id",
-            "subj_name",
-            F.col("name").alias("predicate"),
-            "obj_name",
-            "norm_fact",
-            F.unix_micros("valid_at").alias("valid_us"),
-            F.unix_micros("invalid_at").alias("invalid_us"),
-        )
-    )
+    return _edge_rows(_closed_fuzzy_result(spark, sf_dir))
 
 
 def _kg_duplicate_pairs_closed(spark: SparkSession, sf_dir: str) -> DataFrame:

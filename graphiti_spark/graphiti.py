@@ -20,8 +20,9 @@ switch method-for-method:
 Every mutation goes through the same batch pipeline the bulk path uses
 (Kappa arrangement — one code path for one episode or a billion), resolves
 against the store's current canonical nodes (D11) and MERGE-upserts the
-nodes/edges/mentions/episodes tables, so state accumulates across calls
-exactly like the reference's graph database does.
+episodes/nodes/edges/mentions/duplicate_pairs tables through
+store.merge_tables, so state accumulates across calls exactly like the
+reference's graph database does.
 """
 
 from __future__ import annotations
@@ -37,26 +38,20 @@ from graphiti_spark.schemas import WEB_PAGES
 from graphiti_spark.store import (
     EPISODE_WINDOW_LEN,
     ParquetStore,
+    batch_tables,
+    merge_tables,
     remove_episode as _remove_episode,
     retrieve_episodes as _retrieve_episodes,
 )
 
-_EPISODE_COLS = (
-    "uuid",
-    "name",
-    "group_id",
-    "source",
-    "source_description",
-    "content",
-    "valid_at",
-    "entity_edges",
-)
-
 
 class GraphitiSpark:
-    """Stateful facade over a graph store (default: partitioned parquet via
-    ParquetStore; pass any object with the same read/exists/merge_upsert/
-    overwrite surface, e.g. IcebergStore, for a lakehouse deployment)."""
+    """Stateful facade over a graph store: group_id-partitioned parquet via
+    ParquetStore by default. A custom `store` needs ParquetStore's read /
+    exists / merge_upsert / overwrite / overwrite_partitions / delete_table
+    surface. IcebergStore has no exists / overwrite, so it is not a
+    drop-in store here; its MERGE INTO SQL is the catalog-native form of
+    merge_upsert."""
 
     def __init__(
         self,
@@ -129,11 +124,13 @@ class GraphitiSpark:
         or a list of dicts with url/warc_ts/text (html/lang/group_id
         optional). Returns the per-call pipeline outputs (the store holds
         the accumulated graph)."""
-        meta = None  # per-episode source/source_description overrides
         if isinstance(episodes, DataFrame):
             batch = episodes
             group_col = None
         else:
+            from pyspark.sql.types import StringType, StructField, StructType
+
+            fields = list(WEB_PAGES.fields) + [StructField("group_id", StringType())]
             rows = [
                 (
                     e["url"],
@@ -145,44 +142,17 @@ class GraphitiSpark:
                 )
                 for e in episodes
             ]
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            schema = StructType(
-                list(WEB_PAGES.fields) + [StructField("group_id", StringType())]
-            )
-            batch = self.spark.createDataFrame(rows, schema=schema)
+            # per-episode source/source_description overrides ride in the
+            # batch frame; rows without any take pages_to_episodes' defaults
+            own = ["source" in e or "source_description" in e for e in episodes]
+            if any(own):
+                fields += [StructField(c, StringType()) for c in ("source", "source_description")]
+                rows = [
+                    row + ((e.get("source", "text"), e.get("source_description", "")) if o else (None, None))
+                    for row, e, o in zip(rows, episodes, own)
+                ]
+            batch = self.spark.createDataFrame(rows, schema=StructType(fields))
             group_col = F.col("group_id")
-            meta_rows = [
-                (
-                    e["url"],
-                    e["warc_ts"],
-                    e.get("source", "text"),
-                    e.get("source_description", ""),
-                )
-                for e in episodes
-                if "source" in e or "source_description" in e
-            ]
-            if meta_rows:
-                # one override row per EPISODE key (url, warc_ts) — the
-                # pipeline's ep_valid_at IS warc_ts (pipeline.py builds
-                # episode uuids from (url, warc_ts)), so re-crawls of the
-                # same url in one batch each keep their OWN metadata; only
-                # byte-identical duplicate keys (degenerate input) collapse
-                # to the deterministic max pair
-                meta = (
-                    self.spark.createDataFrame(
-                        meta_rows,
-                        schema="name string, valid_at timestamp, _src string, _srcd string",
-                    )
-                    .groupBy("name", "valid_at")
-                    .agg(F.max(F.struct("_src", "_srcd")).alias("_m"))
-                    .select(
-                        "name",
-                        "valid_at",
-                        F.col("_m._src").alias("_src"),
-                        F.col("_m._srcd").alias("_srcd"),
-                    )
-                )
         existing = self.store.read("nodes") if self.store.exists("nodes") else None
         result = run_pipeline(
             self.spark,
@@ -192,41 +162,15 @@ class GraphitiSpark:
             existing_nodes=existing,
             registry=self.registry,
         )
-        eps = result["episodes_with_edges"].select(
-            F.col("episode_uuid").alias("uuid"),
-            "name",
-            "group_id",
-            "source",
-            "source_description",
-            "content",
-            F.col("ep_valid_at").alias("valid_at"),
-            "entity_edges",
-        )
-        if meta is not None:
-            # the pipeline's S3 contract stamps source="text"; the facade
-            # honors the reference add_episode's per-episode overrides
-            eps = (
-                eps.join(F.broadcast(meta), on=["name", "valid_at"], how="left")
-                .withColumn("source", F.coalesce("_src", "source"))
-                .withColumn("source_description", F.coalesce("_srcd", "source_description"))
-                .drop("_src", "_srcd")
-            )
-        self.store.merge_upsert("episodes", eps)
-        self.store.merge_upsert("nodes", result["nodes"], array_merge_cols=("aliases",))
-        self.store.merge_upsert("edges", result["edges"], array_merge_cols=("episodes",))
-        self.store.merge_upsert("mentions", result["mentions"])
-        self.store.merge_upsert("duplicate_pairs", result["duplicate_pairs"])
+        merge_tables(self.store, batch_tables(result))
         result["release"]()
         return result
 
     def get_duplicate_pairs(self, group_ids: list[str] | None = None) -> DataFrame:
         """The accumulated IS_DUPLICATE_OF provenance table (ref
         edge_operations.py:609-670): which raw names folded into which
-        canonical entity, across every ingested batch."""
-        from graphiti_spark.schemas import DUPLICATE_PAIRS
-
-        if not self.store.exists("duplicate_pairs"):
-            return self.spark.createDataFrame([], schema=DUPLICATE_PAIRS)
+        canonical entity, across every ingested batch (empty before the
+        first)."""
         df = self.store.read("duplicate_pairs")
         return df.filter(F.col("group_id").isin(group_ids)) if group_ids else df
 
@@ -247,8 +191,7 @@ class GraphitiSpark:
         )
         existing = self.store.read("nodes") if self.store.exists("nodes") else None
         result = add_triplets(self.spark, trip, existing_nodes=existing)
-        self.store.merge_upsert("nodes", result["nodes"], array_merge_cols=("aliases",))
-        self.store.merge_upsert("edges", result["edges"], array_merge_cols=("episodes",))
+        merge_tables(self.store, {t: result[t] for t in ("nodes", "edges")})
         result["release"]()
 
     def remove_episode(self, episode_uuid: str) -> None:
@@ -258,9 +201,9 @@ class GraphitiSpark:
         (every uuid embeds its group_id; mentions/edges only reference
         same-group episodes and entities), so only the episode's group_id
         partition of each table is read, recomputed and swapped — an O(1)
-        logical delete costs O(group), not O(table). Falls back to the
-        full-table rewrite for stores without overwrite_partitions or for
-        a null group_id (not value-addressable as a partition directory).
+        logical delete costs O(group), not O(table). A null group_id (not
+        value-addressable as a partition directory) takes the full-table
+        rewrite.
         """
         row = (
             self.store.read("episodes")
@@ -272,7 +215,7 @@ class GraphitiSpark:
         if not row:
             return  # unknown episode: nothing to cascade
         gid = row[0]["group_id"]
-        restricted = gid is not None and hasattr(self.store, "overwrite_partitions")
+        restricted = gid is not None
 
         def _read(t):
             df = self.store.read(t)

@@ -55,7 +55,9 @@ from graphiti_spark.operators.node_dedup import (
 def pages_to_episodes(pages: DataFrame, group_col=None, lang: str | None = "en") -> DataFrame:
     """S3: RawEpisode contract from web pages. Text comes from the html->text
     UDF (byte-identical per url); the input text column, when present, is
-    only a cross-check. group_id defaults to the url host."""
+    only a cross-check. group_id defaults to the url host; source and
+    source_description come from input columns of those names when present
+    (per-episode overrides) and default to 'text' / 'web crawl'."""
     if group_col is None:
         group_col = F.regexp_extract(F.col("url"), r"https?://([^/]+)", 1)
     df = pages
@@ -67,14 +69,19 @@ def pages_to_episodes(pages: DataFrame, group_col=None, lang: str | None = "en")
         if "html" in df.columns
         else F.col("text")
     )
+
+    def given(col: str, default: str):
+        lit = F.lit(default)
+        return F.coalesce(F.col(col), lit) if col in df.columns else lit
+
     return df.select(
         det_id_col(F.lit("ep"), F.col("url"), F.col("warc_ts").cast("string")).alias(
             "episode_uuid"
         ),
         F.col("url").alias("name"),
         group_col.alias("group_id"),
-        F.lit("text").alias("source"),
-        F.lit("web crawl").alias("source_description"),
+        given("source", "text").alias("source"),
+        given("source_description", "web crawl").alias("source_description"),
         content.alias("content"),
         F.col("warc_ts").alias("ep_valid_at"),
     )
@@ -158,15 +165,23 @@ def run_pipeline(
     )
 
     # episode.entity_edges: uuids of edges whose provenance includes the
-    # episode (ref graphiti.py:544-546) — lazy; computed if consumed
+    # episode (ref graphiti.py:544-546) — lazy; computed if consumed. The
+    # frame is the store's episode row.
     ep_edges = (
         out["edges"]
         .select(F.col("uuid").alias("edge_uuid"), F.explode("episodes").alias("episode_uuid"))
         .groupBy("episode_uuid")
         .agg(F.sort_array(F.collect_list("edge_uuid")).alias("entity_edges"))
     )
-    episodes_out = episodes.join(ep_edges, on="episode_uuid", how="left").withColumn(
-        "entity_edges", F.coalesce(F.col("entity_edges"), F.array().cast("array<string>"))
+    episodes_out = episodes.join(ep_edges, on="episode_uuid", how="left").select(
+        F.col("episode_uuid").alias("uuid"),
+        "name",
+        "group_id",
+        "source",
+        "source_description",
+        "content",
+        F.col("ep_valid_at").alias("valid_at"),
+        F.coalesce(F.col("entity_edges"), F.array().cast("array<string>")).alias("entity_edges"),
     )
 
     return {

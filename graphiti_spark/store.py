@@ -4,12 +4,17 @@ cascade deletes.
 The reference materializes nodes/edges with Cypher ``UNWIND ... MERGE (n
 {uuid}) SET n = row`` per provider (/root/reference/graphiti_core/
 models/nodes/node_db_queries.py:22-102, utils/bulk_utils.py:131-265) —
-last-writer-wins upsert keyed on uuid. Here the store is a directory of
-partitioned parquet tables behind a small interface; `merge_upsert` is the
-Iceberg ``MERGE INTO`` expressed as a union + last-writer-wins window,
-which is exactly what Iceberg's copy-on-write MERGE compiles to. On a real
-cluster the same call sites switch to `spark.sql("MERGE INTO ...")` —
-the semantics below are the contract.
+last-writer-wins upsert keyed on uuid, which every ingest path reaches
+through add_nodes_and_edges_bulk. Here the store is a directory of
+partitioned parquet tables behind a small interface. Every write stages
+new files, then swaps them in: a whole table (`overwrite`) or some
+group_id partitions (`overwrite_partitions`); `recover` repairs a crash
+between the renames. `merge_upsert` is the Iceberg ``MERGE INTO``
+expressed as a union + last-writer-wins window, which is exactly what
+Iceberg's copy-on-write MERGE compiles to; `merge_tables` applies each
+table's key and accumulating columns and is the one write-out every
+ingest path calls. On a real cluster the same call sites switch to
+`spark.sql("MERGE INTO ...")` — the semantics below are the contract.
 
 Deletes are anti-joins (S10 `clear_data`/delete-by-uuid, nodes.py:101-344)
 and `remove_episode`'s cascade (S11, graphiti.py:1085-1113): edges whose
@@ -19,9 +24,13 @@ provenance starts with the episode, then entities mentioned only by it.
 from __future__ import annotations
 
 import os
+import shutil
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from graphiti_spark.schemas import STORE_TABLES
 
 EPISODE_WINDOW_LEN = 3  # ref graph_data_operations.py:31
 
@@ -44,15 +53,12 @@ class ParquetStore:
         try:
             return self.spark.read.parquet(self.path(table))
         except Exception:
-            # a partitioned write of an EMPTY frame leaves a directory with
-            # no data files (only _SUCCESS), which defeats schema inference
-            # — possible for tables that can legitimately be empty on a
-            # batch (e.g. duplicate_pairs when nothing deduped). Only that
-            # case falls back to the canonical empty frame: a table WITH
-            # data files that fails to read is corrupt, and merge_upsert
-            # must not overwrite it with the new batch alone.
-            from graphiti_spark.schemas import STORE_TABLES
-
+            # a missing table, or a partitioned write of an EMPTY frame
+            # (only _SUCCESS, which defeats schema inference — e.g.
+            # duplicate_pairs when nothing deduped), has no data files and
+            # reads as the canonical empty frame. A table WITH data files
+            # that fails to read is corrupt, and merge_upsert must not
+            # overwrite it with the new batch alone.
             if table in STORE_TABLES and not self._has_data_files(table):
                 return self.spark.createDataFrame([], schema=STORE_TABLES[table])
             raise
@@ -65,7 +71,8 @@ class ParquetStore:
         )
 
     def recover(self, table: str) -> None:
-        """Crash recovery for merge_upsert's two commit protocols.
+        """Crash recovery for the stage-then-swap commit of `overwrite`
+        and `overwrite_partitions`.
 
         Table-level: a crash between the table renames leaves only the
         `__old` backup (final dir missing) — restore it.
@@ -77,8 +84,6 @@ class ParquetStore:
         delete it (otherwise Spark partition discovery would read it as
         partition value 'X__old' and resurrect stale rows under a bogus
         group_id)."""
-        import shutil
-
         final, bak = self.path(table), self.path(table) + "__old"
         if not os.path.isdir(final) and os.path.isdir(bak):
             os.rename(bak, final)
@@ -93,21 +98,23 @@ class ParquetStore:
                 else:
                     os.rename(stale, live)
 
-    def overwrite(self, table: str, df: DataFrame, partition_by: str | None = "group_id"):
-        """Full-table replace through the same stage-then-swap commit
-        protocol as merge_upsert: `df` MAY lazily derive from the table
-        itself (read-modify-overwrite, e.g. remove_episode's cascade) —
-        a direct overwrite would delete the source files mid-scan — and a
-        crash mid-commit leaves `__old` for recover() instead of losing
-        the table."""
-        import shutil
-
+    def _stage(self, table: str, df: DataFrame, partition_by: str | None) -> str:
+        """Write `df` to the table's staging directory (clearing any stale
+        one from a failed run) and return its path. `df` may lazily derive
+        from the table itself: nothing live is touched until the swap."""
         tmp = self.path(table) + "__staging"
         shutil.rmtree(tmp, ignore_errors=True)
         w = df.write.mode("overwrite")
         if partition_by and partition_by in df.columns:
             w = w.partitionBy(partition_by)
         w.parquet(tmp)
+        return tmp
+
+    def overwrite(self, table: str, df: DataFrame, partition_by: str | None = "group_id"):
+        """Full-table replace: stage, rename the live table aside to
+        `__old`, rename staging in, drop the backup. A crash between the
+        renames leaves `__old` for recover() instead of losing the table."""
+        tmp = self._stage(table, df, partition_by)
         final = self.path(table)
         bak = final + "__old"
         shutil.rmtree(bak, ignore_errors=True)
@@ -127,46 +134,39 @@ class ParquetStore:
         I/O, like Iceberg's dynamic partition overwrite). `df` must hold
         rows for those groups only; untouched partitions' files are never
         rewritten or moved. A group in `groups` for which `df` has no rows
-        is deleted (its live directory removed).
+        is deleted.
 
-        Same stage-then-swap protocol as merge_upsert's touched-partition
-        path, so recover() handles mid-swap crashes; for the became-empty
-        case a crash between the aside-rename and cleanup resurrects the
-        partition on recover — re-running the delete is idempotent.
+        Each partition swaps like `overwrite` swaps a table: the live dir
+        is renamed aside to `group_id=X__old` first, so recover() handles
+        a crash mid-swap. For a deleted group a crash before the cleanup
+        resurrects the partition on recover — re-running the delete is
+        idempotent.
         """
-        import shutil
-        import urllib.parse
-
         self.recover(table)
         if not self.exists(table):
             self.overwrite(table, df)
             return
-        tmp = self.path(table) + "__staging"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").partitionBy("group_id").parquet(tmp)
+        tmp = self._stage(table, df, "group_id")
         final = self.path(table)
         staged = {e for e in os.listdir(tmp) if e.startswith("group_id=")}
-        for part in staged:
-            src, dst = os.path.join(tmp, part), os.path.join(final, part)
+        # groups that became empty produce no staging dir. Partition values
+        # are matched by unescaping the Hive-style %xx path encoding
+        # (identity for the url-host/word group ids this engine generates).
+        wanted = set(groups)
+        emptied = [
+            e for e in os.listdir(final)
+            if e.startswith("group_id=") and not e.endswith("__old") and e not in staged
+            and urllib.parse.unquote(e[len("group_id="):]) in wanted
+        ]
+        for part in [*staged, *emptied]:
+            dst = os.path.join(final, part)
             bak = dst + "__old"
             shutil.rmtree(bak, ignore_errors=True)
             if os.path.isdir(dst):
                 os.rename(dst, bak)
-            os.rename(src, dst)
+            if part in staged:
+                os.rename(os.path.join(tmp, part), dst)
             shutil.rmtree(bak, ignore_errors=True)
-        # groups that became empty produce no staging dir — drop their live
-        # dir. Partition values are matched by unescaping the Hive-style
-        # %xx path encoding (identity for the url-host/word group ids this
-        # engine generates).
-        wanted = set(groups)
-        for entry in os.listdir(final):
-            if not entry.startswith("group_id=") or entry.endswith("__old"):
-                continue
-            if entry in staged:
-                continue
-            value = urllib.parse.unquote(entry[len("group_id="):])
-            if value in wanted:
-                shutil.rmtree(os.path.join(final, entry), ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
     def merge_upsert(
@@ -181,35 +181,32 @@ class ParquetStore:
         unmatched rows insert. Last-writer-wins inside `updates` too.
 
         `array_merge_cols` accumulate instead of replace (distinct union of
-        old + new) — used for node `aliases` and edge `episodes` provenance
-        so incremental batches never lose history.
+        old + new) — see MERGE_KEYS / ACCUMULATE for each table's rule.
 
         PARTITION-RESTRICTED: when the table is group_id-partitioned, only
-        the partitions present in `updates` are read, merged and swapped —
-        I/O is O(touched partitions) per micro-batch, not O(table), which is
-        what Iceberg's partition-level copy-on-write MERGE INTO does (see
-        IcebergStore for the catalog-native form). Keys are assumed not to
-        move between groups (uuid embeds group_id by construction).
+        the partitions present in `updates` are read, merged and swapped
+        through `overwrite_partitions` — I/O is O(touched partitions) per
+        micro-batch, not O(table), which is what Iceberg's partition-level
+        copy-on-write MERGE INTO does (see IcebergStore for the
+        catalog-native form). Keys are assumed not to move between groups
+        (uuid embeds group_id by construction).
         """
         self.recover(table)
         if not self.exists(table):
             self.overwrite(table, updates.dropDuplicates([key]))
             return
 
-        partitioned = "group_id" in updates.columns and self._is_partitioned(table)
         touched: list[str] | None = None
-        if partitioned:
+        if "group_id" in updates.columns and self._is_partitioned(table):
             groups = [
                 r["group_id"] for r in updates.select("group_id").distinct().collect()
             ]
-            if any(g is None for g in groups):
-                # null group_id rows land in __HIVE_DEFAULT_PARTITION__,
-                # which the touched-partition scan cannot address by value —
-                # pre-existing null-group rows absent from the batch would be
-                # silently dropped by the swap. Fall back to the full-table
-                # merge, which reads and rewrites every partition.
-                touched = None
-            else:
+            # null and empty group_ids land in __HIVE_DEFAULT_PARTITION__,
+            # which the touched-partition scan cannot address by value —
+            # pre-existing rows there absent from the batch would be
+            # silently dropped by the swap. Those batches take the
+            # full-table merge, which reads and rewrites every partition.
+            if all(g not in (None, "") for g in groups):
                 touched = groups
         target = self.read(table)
         if touched is not None:
@@ -253,48 +250,12 @@ class ParquetStore:
             .filter(F.col("_rn") == 1)
             .drop("_src", "_rn")
         )
-        # commit protocol (crash-tolerant without an atomic dir swap):
-        # 1. clear any stale staging from a previous failed run, write staging
-        # 2. rename final aside, rename staging in, drop the backup
-        # A crash between 2's renames leaves `__old` in place — recover()
-        # (called from read()) restores it, so the table never disappears.
-        import shutil
-
-        tmp = self.path(table) + "__staging"
-        shutil.rmtree(tmp, ignore_errors=True)
-        m = merged.write.mode("overwrite")
-        if "group_id" in merged.columns:
-            m = m.partitionBy("group_id")
-        m.parquet(tmp)
-        final = self.path(table)
+        # every touched group has update rows, so the swap replaces exactly
+        # those partitions and deletes none
         if touched is not None:
-            # swap ONLY the partition directories staging produced (exactly
-            # the touched groups — target was pre-filtered to them);
-            # untouched partitions are never rewritten or moved. Iterating
-            # staging's own entries sidesteps Spark's partition-value path
-            # escaping.
-            for part in os.listdir(tmp):
-                if not part.startswith("group_id="):
-                    continue
-                src = os.path.join(tmp, part)
-                dst = os.path.join(final, part)
-                bak = dst + "__old"
-                shutil.rmtree(bak, ignore_errors=True)
-                if os.path.isdir(dst):
-                    os.rename(dst, bak)
-                os.rename(src, dst)
-                shutil.rmtree(bak, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
-        bak = final + "__old"
-        shutil.rmtree(bak, ignore_errors=True)
-        os.rename(final, bak)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            os.rename(bak, final)  # roll back: staging rename failed
-            raise
-        shutil.rmtree(bak, ignore_errors=True)
+            self.overwrite_partitions(table, merged, touched)
+        else:
+            self.overwrite(table, merged)
 
     def _is_partitioned(self, table: str) -> bool:
         root = self.path(table)
@@ -309,21 +270,56 @@ class ParquetStore:
 
     def delete_table(self, table: str) -> None:
         """Drop the table directory (plus any staging/backup remnants)."""
-        import shutil
-
         for suffix in ("", "__staging", "__old"):
             shutil.rmtree(self.path(table) + suffix, ignore_errors=True)
 
     def delete_group(self, group_ids: list[str]) -> None:
-        """clear_data(group_ids): partition-pruned delete across all tables."""
-        for table in ("episodes", "nodes", "edges", "mentions"):
-            if self.exists(table):
-                df = self.read(table).filter(~F.col("group_id").isin(group_ids))
-                self.overwrite(table + "__staging_del", df)
-                import shutil
+        """clear_data(group_ids) across every store table. A partitioned
+        table drops just those partitions (O(touched groups)); any other
+        table is rewritten without the groups' rows."""
+        for table in STORE_TABLES:
+            if not self.exists(table):
+                continue
+            df = self.read(table)
+            if self._is_partitioned(table):
+                self.overwrite_partitions(table, df.limit(0), group_ids)
+            else:
+                keep = F.col("group_id").isNull() | ~F.col("group_id").isin(group_ids)
+                self.overwrite(table, df.filter(keep), partition_by=None)
 
-                shutil.rmtree(self.path(table), ignore_errors=True)
-                os.rename(self.path(table + "__staging_del"), self.path(table))
+
+# ---------------------------------------------------------------------------
+# S6 — the one write-out every ingest path uses
+# ---------------------------------------------------------------------------
+
+# Per-table merge rule: the merge key (default "uuid") and the array columns
+# that accumulate across batches instead of being replaced — node aliases
+# and edge episode provenance, so incremental batches never lose history.
+MERGE_KEYS = {"community_members": "edge_uuid"}
+ACCUMULATE = {"nodes": ("aliases",), "edges": ("episodes",)}
+
+
+def batch_tables(result: dict) -> dict[str, DataFrame]:
+    """The five tables an ingested batch writes, from a run_pipeline
+    result, in write order (episodes come out of the pipeline already in
+    the store's episode shape)."""
+    return {
+        "episodes": result["episodes_with_edges"],
+        **{t: result[t] for t in ("nodes", "edges", "mentions", "duplicate_pairs")},
+    }
+
+
+def merge_tables(store, frames: dict[str, DataFrame]) -> None:
+    """MERGE-upsert each frame into its table under that table's rule —
+    the reference's add_nodes_and_edges_bulk (bulk_utils.py:131-265),
+    which every ingest path (add_episode[_bulk], add_triplet, the stream,
+    spark-submit) calls."""
+    for table, df in frames.items():
+        store.merge_upsert(
+            table, df,
+            key=MERGE_KEYS.get(table, "uuid"),
+            array_merge_cols=ACCUMULATE.get(table, ()),
+        )
 
 
 class IcebergStore:

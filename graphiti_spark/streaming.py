@@ -6,8 +6,11 @@ workers. The Spark-native equivalent: a `readStream` over the landing
 table/directory of web pages, `foreachBatch` running the SAME batch
 pipeline incrementally — each micro-batch resolves against the current
 canonical node snapshot (D11, node_dedup.resolve_names(existing_nodes))
-and MERGE-upserts into the store, so stream and batch share one code path
-(the Kappa-style arrangement Spark encourages).
+and writes the same five tables as GraphitiSpark.add_episode_bulk
+(episodes, nodes, edges, mentions, duplicate_pairs) through the same
+store.merge_tables write-out, so stream and batch share one code path
+(the Kappa-style arrangement Spark encourages). Once communities exist,
+new entities attach to them incrementally (G6).
 """
 
 from __future__ import annotations
@@ -15,8 +18,23 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from graphiti_spark.pipeline import run_pipeline
-from graphiti_spark.store import ParquetStore
+from graphiti_spark.pipeline import pages_to_episodes, run_pipeline
+from graphiti_spark.schemas import WEB_PAGES
+from graphiti_spark.store import (
+    EPISODE_WINDOW_LEN,
+    ParquetStore,
+    batch_tables,
+    merge_tables,
+)
+
+
+def _episode_keys(pages):
+    """The stored episode row's (uuid, group_id, valid_at) per page."""
+    return pages_to_episodes(pages).select(
+        F.col("episode_uuid").alias("uuid"),
+        "group_id",
+        F.col("ep_valid_at").alias("valid_at"),
+    )
 
 
 def ingest_stream(
@@ -34,8 +52,6 @@ def ingest_stream(
     available_now=True drains everything currently present then stops —
     the testable mode; False runs continuously.
     """
-    from graphiti_spark.schemas import WEB_PAGES
-
     store = ParquetStore(spark, store_root)
     reader = spark.readStream.schema(schema or WEB_PAGES).parquet(input_path)
 
@@ -49,9 +65,7 @@ def ingest_stream(
             with_embeddings=with_embeddings,
             existing_nodes=existing,
         )
-        store.merge_upsert("nodes", result["nodes"], array_merge_cols=("aliases",))
-        store.merge_upsert("edges", result["edges"], array_merge_cols=("episodes",))
-        store.merge_upsert("mentions", result["mentions"])
+        merge_tables(store, batch_tables(result))
         # G6 incremental communities: if a community structure exists, new
         # entities join the plurality community of their neighbors instead
         # of re-running label propagation over the whole graph
@@ -62,7 +76,7 @@ def ingest_stream(
             new_members = attach_new_members(
                 store.read("community_members"), store.read("edges"), result["nodes"]
             )
-            store.merge_upsert("community_members", new_members, key="edge_uuid")
+            merge_tables(store, {"community_members": new_members})
         # every upsert has materialized its input — drop this micro-batch's
         # stage caches so storage memory stays flat across the stream's life
         result["release"]()
@@ -104,10 +118,6 @@ def episode_context_stream(
     """
     import pandas as pd
 
-    from graphiti_spark.pipeline import pages_to_episodes
-    from graphiti_spark.schemas import WEB_PAGES
-    from graphiti_spark.store import EPISODE_WINDOW_LEN
-
     n = last_n or EPISODE_WINDOW_LEN
     out_schema = (
         "uuid string, group_id string, valid_at timestamp, prev_uuids array<string>"
@@ -142,11 +152,7 @@ def episode_context_stream(
         )
 
     reader = spark.readStream.schema(schema or WEB_PAGES).parquet(input_path)
-    episodes = pages_to_episodes(reader).select(
-        F.col("episode_uuid").alias("uuid"),
-        "group_id",
-        F.col("ep_valid_at").alias("valid_at"),
-    )
+    episodes = _episode_keys(reader)
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     result = episodes.groupBy("group_id").applyInPandasWithState(
@@ -220,15 +226,8 @@ def windowed_episode_counts(
     same pages through the stream (with a watermark-advancing sentinel)
     yields the same closed windows the batch transform computes.
     """
-    from graphiti_spark.pipeline import pages_to_episodes
-    from graphiti_spark.schemas import WEB_PAGES
-
     reader = spark.readStream.schema(schema or WEB_PAGES).parquet(input_path)
-    episodes = pages_to_episodes(reader).select(
-        F.col("episode_uuid").alias("uuid"),
-        "group_id",
-        F.col("ep_valid_at").alias("valid_at"),
-    )
+    episodes = _episode_keys(reader)
     agg = _windowed_counts_transform(
         episodes.withWatermark("valid_at", watermark), window_duration
     )
@@ -247,11 +246,5 @@ def windowed_episode_counts_batch(
     pages, window_duration: str = "1 hour", exact_distinct: bool = False
 ):
     """Batch twin of windowed_episode_counts over a static pages frame."""
-    from graphiti_spark.pipeline import pages_to_episodes
-
-    episodes = pages_to_episodes(pages).select(
-        F.col("episode_uuid").alias("uuid"),
-        "group_id",
-        F.col("ep_valid_at").alias("valid_at"),
-    )
+    episodes = _episode_keys(pages)
     return _windowed_counts_transform(episodes, window_duration, exact_distinct)

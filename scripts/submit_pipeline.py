@@ -14,6 +14,9 @@ In-sandbox (no cluster, no Iceberg runtime jar) the same script runs on
 local[N] against parquet; the store is the ParquetStore MERGE fallback —
 swap `store.merge_upsert` for `spark.sql("MERGE INTO ...")` when the
 iceberg-spark-runtime jar is on the classpath (SURVEY.md §7 Hard parts).
+The batch tables go through store.merge_tables, as in GraphitiSpark. No
+D11 against the graph already at --output: the stage checkpoints'
+fingerprints cover the input, not the store's snapshot.
 
 Resumability: every stage writes a lineage manifest
 (stage, input_fingerprint, row_count, content_hash, per-partition rows);
@@ -45,7 +48,7 @@ def main() -> int:
 
     from graphiti_spark.pipeline import run_pipeline
     from graphiti_spark.session import get_spark
-    from graphiti_spark.store import ParquetStore
+    from graphiti_spark.store import ParquetStore, batch_tables, merge_tables
     from graphiti_spark.operators.communities import build_community_tables
 
     spark = get_spark("graphiti-spark-ingest")
@@ -60,10 +63,7 @@ def main() -> int:
     )
 
     store = ParquetStore(spark, args.output)
-    for table in ("nodes", "edges", "mentions"):
-        store.merge_upsert(table, result[table])
-    store.merge_upsert("episodes", result["episodes"].withColumnRenamed("episode_uuid", "uuid"),
-                       key="uuid")
+    merge_tables(store, batch_tables(result))
     if args.communities:
         comms, members = build_community_tables(result["nodes"], result["edges"])
         store.overwrite("communities", comms)

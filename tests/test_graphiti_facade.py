@@ -168,3 +168,23 @@ def test_duplicate_url_meta_no_fanout(spark, tmp_path):
     # and the overrides landed on the right episodes: the re-crawl (+1h)
     # carries the second pair
     assert eps["json"]["valid_at"] > eps["message"]["valid_at"]
+
+    # mixed batch: a row giving only `source` gets an empty description;
+    # a row with no overrides takes the S3 defaults
+    mixed = GraphitiSpark(spark, str(tmp_path / "mixed"))
+    mixed.add_episode_bulk(
+        [
+            {"url": "https://mix.example/a", "warc_ts": NOW,
+             "text": "Alice Smith works at Initech Corp.", "source": "message"},
+            {"url": "https://mix.example/b", "warc_ts": NOW,
+             "text": "Bob Jones works at Globex Inc."},
+        ]
+    )
+    got = {
+        e["name"]: (e["source"], e["source_description"])
+        for e in mixed.store.read("episodes").collect()
+    }
+    assert got == {
+        "https://mix.example/a": ("message", ""),
+        "https://mix.example/b": ("text", "web crawl"),
+    }

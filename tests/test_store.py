@@ -44,6 +44,75 @@ def test_delete_group(spark, tmp_path):
     assert [r["uuid"] for r in store.read("nodes").collect()] == ["u2"]
 
 
+def _group_tables(spark, store):
+    """Two groups in a partitioned table of each kind delete_group must
+    cover, plus an unpartitioned community_members table."""
+    nodes = spark.createDataFrame(
+        [("n1", "g1", "a"), ("n2", "g2", "b")], schema="uuid string, group_id string, name string"
+    )
+    pairs = spark.createDataFrame(
+        [("p1", "g1", "n1"), ("p2", "g2", "n2")],
+        schema="uuid string, group_id string, target_node_uuid string",
+    )
+    comms = spark.createDataFrame(
+        [("c1", "g1", "x"), ("c2", "g2", "y")], schema="uuid string, group_id string, name string"
+    )
+    members = spark.createDataFrame(
+        [("m1", "g1", "c1"), ("m2", "g2", "c2"), ("m3", None, "c0")],
+        schema="edge_uuid string, group_id string, source_node_uuid string",
+    )
+    store.overwrite("nodes", nodes)
+    store.overwrite("duplicate_pairs", pairs)
+    store.overwrite("communities", comms)
+    store.overwrite("community_members", members, partition_by=None)
+
+
+def _rows(store, table):
+    return sorted(tuple(r) for r in store.read(table).collect())
+
+
+def test_delete_group_covers_every_store_table(spark, tmp_path):
+    store = ParquetStore(spark, str(tmp_path))
+    _group_tables(spark, store)
+    store.delete_group(["g1"])
+    for table in ("nodes", "duplicate_pairs", "communities", "community_members"):
+        groups = {r["group_id"] for r in store.read(table).collect()}
+        assert "g1" not in groups and "g2" in groups, table
+    # a null-group row is no group's to delete
+    assert store.read("community_members").filter("group_id is null").count() == 1
+
+
+def test_delete_group_failed_root_rename_loses_nothing(spark, tmp_path, monkeypatch):
+    """A rename onto a table's root directory that fails mid-delete (a
+    crash between the swap's renames) leaves each table readable as
+    exactly its pre-delete or its post-delete rows."""
+    import os
+
+    from graphiti_spark import store as store_mod
+
+    store = ParquetStore(spark, str(tmp_path))
+    _group_tables(spark, store)
+    tables = ("nodes", "duplicate_pairs", "communities", "community_members")
+    pre = {t: _rows(store, t) for t in tables}
+    roots = {os.path.normpath(store.path(t)) for t in tables}
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if os.path.normpath(dst) in roots:
+            raise OSError(f"injected failure renaming onto {dst}")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod.os, "rename", rename)
+        try:
+            store.delete_group(["g1"])
+        except OSError:
+            pass
+    for t in tables:
+        post = [r for r in pre[t] if "g1" not in r]
+        assert _rows(store, t) in (pre[t], post), t
+
+
 def _episodes(spark):
     rows = [
         (f"e{i}", "g1" if i < 4 else "g2", "text", ts(i)) for i in range(6)
@@ -190,6 +259,17 @@ def test_merge_upsert_null_group_falls_back_to_full_merge(spark, tmp_path):
     store.merge_upsert("t", updates)
     rows = {r["uuid"]: (r["group_id"], r["v"]) for r in store.read("t").collect()}
     assert rows == {"u1": ("ga", 1), "u2": (None, 2), "u3": (None, 3)}
+
+
+def test_merge_upsert_empty_group_falls_back_to_full_merge(spark, tmp_path):
+    """An empty-string group_id is written to the same default partition
+    as null (and reads back as null), so it cannot be addressed by value
+    either — a second batch in that group must not replace the first."""
+    store = ParquetStore(spark, str(tmp_path))
+    schema = "uuid string, group_id string, v long"
+    store.merge_upsert("t", spark.createDataFrame([("u1", "", 1), ("u2", "ga", 2)], schema))
+    store.merge_upsert("t", spark.createDataFrame([("u3", "", 3)], schema))
+    assert {r["uuid"] for r in store.read("t").collect()} == {"u1", "u2", "u3"}
 
 
 def test_corrupt_table_raises_on_read_and_merge(spark, tmp_path):

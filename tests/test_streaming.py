@@ -2,12 +2,15 @@
 pipeline incrementally against the store (Kappa-style single code path)."""
 
 import os
+from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from graphiti_spark.datagen import generate_web_pages
+from graphiti_spark.graphiti import GraphitiSpark
+from graphiti_spark.schemas import WEB_PAGES
 from graphiti_spark.store import ParquetStore
 from graphiti_spark.streaming import ingest_stream
 
@@ -68,6 +71,36 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     assert same / len(overlap) >= 0.95
     # uuids unique after merge
     assert nodes2.select("uuid").distinct().count() == nodes2.count()
+    # the stream writes the same tables as the facade, episodes readable
+    assert store.exists("episodes") and store.exists("duplicate_pairs")
+    later = datetime(2100, 1, 1, tzinfo=timezone.utc)
+    assert GraphitiSpark(spark, store_root).retrieve_episodes(later).count() > 0
+
+
+def test_stream_matches_facade_batch(spark, tmp_path):
+    """One micro-batch and GraphitiSpark.add_episode_bulk over the same
+    pages write identical rows to all five batch tables, apart from the
+    columns stamped with the wall-clock `now`."""
+    in_dir = tmp_path / "landing"
+    in_dir.mkdir()
+    _write_pages(str(in_dir / "pages.parquet"), generate_web_pages(n_pages=60, seed=42))
+    stream_root = str(tmp_path / "stream")
+    ingest_stream(spark, str(in_dir), stream_root, str(tmp_path / "ck")).awaitTermination(240)
+    facade = GraphitiSpark(spark, str(tmp_path / "facade"), with_embeddings=False)
+    facade.add_episode_bulk(spark.read.schema(WEB_PAGES).parquet(str(in_dir)))
+
+    now_stamped = {"edges": "expired_at", "duplicate_pairs": "created_at"}
+
+    def rows(store, table):
+        df = store.read(table)
+        df = df.drop(now_stamped.get(table, "_none"))
+        return sorted(str(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+
+    stream = ParquetStore(spark, stream_root)
+    for table in ("episodes", "nodes", "edges", "mentions", "duplicate_pairs"):
+        got = rows(stream, table)
+        assert got, table
+        assert got == rows(facade.store, table), table
 
 
 def test_streaming_incremental_communities(spark, tmp_path):
