@@ -8,8 +8,8 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 The BASELINE.json metric is triples/sec end-to-end
 (extract -> link -> canonicalize -> materialize); `triples_per_sec` reports
-it directly. Scaling-efficiency evidence (same input, local[8] vs
-local[32]) is produced by scripts/bench_scaling.py.
+it directly. Scaling-efficiency evidence (same input, local[N] vs
+local[4N]) is produced by scripts/bench_scaling_v51.py.
 """
 
 from __future__ import annotations
@@ -143,9 +143,8 @@ def main() -> None:
 
     # THIS HOST CARRIES EXTERNAL BURSTY LOAD (loadavg swings 0.5 -> 10+ on
     # a minutes cadence; identical runs vary up to ~8x when a burst lands).
-    # Best-of-2 per measurement is the same noise posture as
-    # scripts/bench_scaling.py's best-of-N: the minimum of two runs is the
-    # closest observable to the engine's true cost on a quiet machine.
+    # Best-of-2 per measurement: the minimum of two runs is the closest
+    # observable to the engine's true cost on a quiet machine.
     pipe_secs = []
     for _ in range(2):
         pipe_sec, n_triples = run_pipeline_timed(spark, sf_dir)

@@ -12,15 +12,19 @@ kernels (minhash/simhash) — never per-row.
 Scale notes:
 - exact/fingerprint dedup: one md5 groupBy — a single shuffle on the hash,
   uniformly distributed by construction (no skew possible).
-- minhash-LSH: |docs| × 8 band rows shuffle; hot buckets capped the same
-  way as node dedup (deliberately-approximate blocking).
+- minhash-LSH and simhash: |docs| × bands rows shuffle through
+  operators/pairs.banded_pairs, the band self-join node dedup uses too;
+  minhash caps hot buckets (deliberately-approximate blocking), simhash's
+  16-bit bands stay uncapped.
 - token-Jaccard: quadratic *within a language block* — correct at oracle
   scale; at 100 TB use minhash_neardup_pairs as the blocked scale path and
   keep this as the verifier on sampled buckets.
-- cosine near-dup: distributed block-grid self-join (exact all-pairs, no
-  driver collect); two sub-quadratic approximate paths: lsh_bucketed_ann
-  (data-oblivious random-hyperplane buckets) and ivf_topk (data-adaptive
-  k-means inverted lists, FAISS IVF-Flat shape).
+- cosine near-dup: one distributed block-grid self-join (_grid_cosine_pairs,
+  exact all-pairs, no driver collect; grouped by k-means cluster for
+  SemDeDup) over kernels.int_cosine; two sub-quadratic approximate paths,
+  lsh_bucketed_ann (data-oblivious random-hyperplane buckets) and ivf_topk
+  (data-adaptive k-means inverted lists, FAISS IVF-Flat shape), end in
+  search.cos_rank like the brute-force cosine_topk.
 """
 
 from __future__ import annotations
@@ -39,7 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from graphiti_spark.search import _dot, cosine_topk, quantize_col
+from graphiti_spark.operators.pairs import banded_pairs
+from graphiti_spark.search import cos_rank, cosine_topk, normed, quantize_col
 
 # ---------------------------------------------------------------------------
 # exact dedup + fingerprinting (hash-groupBy)
@@ -360,21 +365,7 @@ def minhash_neardup_pairs(
         .select("id", F.col("f.band_keys").alias("band_keys"), F.col("f.sig").alias("sig"))
         .localCheckpoint(eager=False)
     )
-    banded = feat.select(
-        "id", "sig", F.posexplode("band_keys").alias("band_pos", "band_key")
-    )
-    sizes = banded.groupBy("band_pos", "band_key").count()
-    banded = banded.join(
-        sizes.filter(F.col("count") <= LSH_DOC_BUCKET_CAP).drop("count"),
-        on=["band_pos", "band_key"],
-    )
-    a = banded.select("band_pos", "band_key", F.col("id").alias("a_id"), F.col("sig").alias("a_sig"))
-    b = banded.select("band_pos", "band_key", F.col("id").alias("b_id"), F.col("sig").alias("b_sig"))
-    pairs = (
-        a.join(b, on=["band_pos", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    pairs = banded_pairs(feat, "id", "band_keys", "sig", LSH_DOC_BUCKET_CAP)
     agree = F.size(
         F.filter(F.zip_with("a_sig", "b_sig", lambda x, y: (x == y).cast("int")), lambda v: v == 1)
     )
@@ -382,7 +373,7 @@ def minhash_neardup_pairs(
     return (
         pairs.withColumn("est_jac", est)
         .filter(F.col("est_jac") >= threshold)
-        .select("a_id", "b_id", "est_jac")
+        .select(F.col("a").alias("a_id"), F.col("b").alias("b_id"), "est_jac")
     )
 
 
@@ -447,30 +438,19 @@ def simhash_neardup_pairs(
         .select(F.col(id_col).alias("id"), simhash_udf(F.col(text_col)).alias("sh"))
         .localCheckpoint(eager=False)
     )
-    bands = sh.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sh"), 16 * i).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band_pos", "band_val"),
+    bands = F.array(
+        *[
+            F.shiftrightunsigned(F.col("sh"), 16 * i).bitwiseAND(F.lit(0xFFFF))
+            for i in range(SIMHASH_BANDS)
+        ]
     )
-    a = bands.select("band_pos", "band_val", F.col("id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = bands.select("band_pos", "band_val", F.col("id").alias("b_id"), F.col("sh").alias("b_sh"))
-    pairs = (
-        a.join(b, on=["band_pos", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    # uncapped: a 16-bit band bucket is the hamming <= 3 guarantee itself
+    pairs = banded_pairs(sh.withColumn("bands", bands), "id", "bands", "sh", cap=None)
     hamming = F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh")))
     return (
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
+        .select(F.col("a").alias("a_id"), F.col("b").alias("b_id"), "hamming")
     )
 
 
@@ -503,18 +483,30 @@ def embedding_neardup_pairs(
     JVM-side via quantize_col; integer dots and IEEE sqrt/div in numpy are
     bit-identical to the DuckDB oracle's arithmetic.
     """
+    rows = embs.select(F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv"))
+    return _grid_cosine_pairs(rows, threshold, n_blocks)
+
+
+def _grid_cosine_pairs(
+    rows: DataFrame, threshold: float, n_blocks: int, group_col: str | None = None
+) -> DataFrame:
+    """The block-grid self-join behind embedding_neardup_pairs (ungrouped)
+    and semantic_neardup_pairs (grouped by `group_col`). rows: id (long),
+    qv (quantized vector)[, group_col (long)]. Output: a_id, b_id
+    [, group_col], cos_x10000 for every pair a < b in one group with
+    cos >= threshold."""
     import numpy as np
+
+    from graphiti_spark.kernels import int_cosine
 
     b = int(n_blocks)
     thr = float(threshold)
-    base = embs.select(
-        F.col(id_col).alias("id"),
-        quantize_col(F.col(vec_col)).alias("qv"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(b)).alias("blk"),
-    )
+    groups = [group_col] if group_col else []
+    out_cols = ["a_id", "b_id", *groups, "cos_x10000"]
+    blk = F.pmod(F.xxhash64(F.col("id")), F.lit(b))
     # row in block k participates in cells (i,k) for i<=k and (k,j) for j>k;
     # cell id = i*b + j with i <= j, so each unordered block pair is one key
-    cells = base.withColumn(
+    cells = rows.withColumn("blk", blk).withColumn(
         "cell",
         F.explode(
             F.concat(
@@ -533,37 +525,33 @@ def embedding_neardup_pairs(
     )
 
     def _cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ci, cj = divmod(int(key[0]), b)
+        ci, cj = divmod(int(key[-1]), b)
         a_side = pdf[pdf["blk"] == ci]
         b_side = pdf[pdf["blk"] == cj] if ci != cj else a_side
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "cos_x10000": []})
+        empty = pd.DataFrame({c: [] for c in out_cols})
         if len(a_side) == 0 or len(b_side) == 0:
             return empty
-        amat = np.array(a_side["qv"].tolist(), dtype=np.int64)
-        bmat = np.array(b_side["qv"].tolist(), dtype=np.int64)
         aid = a_side["id"].to_numpy(dtype=np.int64)
         bid = b_side["id"].to_numpy(dtype=np.int64)
-        anorm = np.sqrt((amat * amat).sum(axis=1).astype(np.float64))
-        bnorm = np.sqrt((bmat * bmat).sum(axis=1).astype(np.float64))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (amat @ bmat.T).astype(np.float64) / (anorm[:, None] * bnorm[None, :])
-            mask = cos >= thr
+        cos = int_cosine(
+            np.array(a_side["qv"].tolist(), dtype=np.int64),
+            np.array(b_side["qv"].tolist(), dtype=np.int64),
+        )
+        mask = cos >= thr
         if ci == cj:
             mask &= aid[:, None] < bid[None, :]
         ai, bi = np.nonzero(mask)
         if len(ai) == 0:
             return empty
         a_ids, b_ids = aid[ai], bid[bi]
-        return pd.DataFrame(
-            {
-                "a_id": np.minimum(a_ids, b_ids),
-                "b_id": np.maximum(a_ids, b_ids),
-                "cos_x10000": np.floor(cos[ai, bi] * 10000.0 + 0.5).astype(np.int64),
-            }
-        )
+        out = {"a_id": np.minimum(a_ids, b_ids), "b_id": np.maximum(a_ids, b_ids)}
+        if group_col:
+            out[group_col] = np.full(len(ai), int(key[0]), dtype=np.int64)
+        out["cos_x10000"] = np.floor(cos[ai, bi] * 10000.0 + 0.5).astype(np.int64)
+        return pd.DataFrame(out)
 
-    return cells.groupBy("cell").applyInPandas(
-        _cell_pairs, schema="a_id long, b_id long, cos_x10000 long"
+    return cells.groupBy(*groups, "cell").applyInPandas(
+        _cell_pairs, schema=", ".join(f"{c} long" for c in out_cols)
     )
 
 
@@ -675,15 +663,21 @@ def lsh_bucketed_ann(
         sigs = signs.reshape(len(vecs), n_tables, n_bits).astype(np.int64) @ weights
         return pd.Series(list(sigs))
 
-    cb = embs.select(
-        F.col(id_col).cast("string").alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "sig"),
+    cb = normed(
+        embs.select(
+            F.col(id_col).cast("string").alias("c_id"),
+            quantize_col(F.col(vec_col)).alias("cv"),
+            F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "sig"),
+        ),
+        "c",
     )
-    qb = queries.select(
-        F.col(id_col).cast("string").alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "sig"),
+    qb = normed(
+        queries.select(
+            F.col(id_col).cast("string").alias("q_id"),
+            quantize_col(F.col(vec_col)).alias("qv"),
+            F.posexplode(sig_udf(F.col(vec_col))).alias("tbl", "sig"),
+        ),
+        "q",
     )
     if probe_bits >= 1:
         # probe every 1-bit flip of the signature (hamming <= 1 covered);
@@ -702,18 +696,7 @@ def lsh_bucketed_ann(
         .filter(F.col("q_id") != F.col("c_id"))
         .dropDuplicates(["q_id", "c_id"])
     )
-    qv = quantize_col(F.col("q_vec"))
-    cv = quantize_col(F.col("c_vec"))
-    cos = _dot(qv, cv).cast("double") / (
-        F.sqrt(_dot(qv, qv).cast("double")) * F.sqrt(_dot(cv, cv).cast("double"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        joined.withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "c_id", "cos", "rnk")
-    )
+    return cos_rank(joined, k)
 
 
 IVF_N_CENTROIDS = 32
@@ -799,30 +782,25 @@ def ivf_topk(
     # ids keep their incoming type: the cosine tie-break (asc c_id) must
     # sort the same way as a numeric oracle ORDER BY — a string cast would
     # rank '10' before '9' (same lesson as ann_topk)
-    cb = embs.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        # index side stores each vector in exactly ONE inverted list
-        F.explode(cells_udf(1)(F.col(vec_col))).alias("cell"),
+    cb = normed(
+        embs.select(
+            F.col(id_col).alias("c_id"),
+            quantize_col(F.col(vec_col)).alias("cv"),
+            # index side stores each vector in exactly ONE inverted list
+            F.explode(cells_udf(1)(F.col(vec_col))).alias("cell"),
+        ),
+        "c",
     )
-    qb = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(cells_udf(min(n_probe, k_eff))(F.col(vec_col))).alias("cell"),
+    qb = normed(
+        queries.select(
+            F.col(id_col).alias("q_id"),
+            quantize_col(F.col(vec_col)).alias("qv"),
+            F.explode(cells_udf(min(n_probe, k_eff))(F.col(vec_col))).alias("cell"),
+        ),
+        "q",
     )
     joined = cb.join(F.broadcast(qb), on="cell").filter(F.col("q_id") != F.col("c_id"))
-    qv = quantize_col(F.col("q_vec"))
-    cv = quantize_col(F.col("c_vec"))
-    cos = _dot(qv, cv).cast("double") / (
-        F.sqrt(_dot(qv, qv).cast("double")) * F.sqrt(_dot(cv, cv).cast("double"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        joined.withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "c_id", "cos", "rnk")
-    )
+    return cos_rank(joined, k)
 
 
 # ---------------------------------------------------------------------------
@@ -2205,69 +2183,11 @@ def semantic_neardup_pairs(
     literals); the pair stage shuffles each vector n_blocks times keyed by
     (cluster, cell); k scales with corpus size (k ~ n/10k keeps expected
     cluster work constant)."""
-    import numpy as np
-
     assigned = kmeans_assign(embs, k=k, rounds=rounds, id_col=id_col, vec_col=vec_col)
-    base = embs.select(
-        F.col(id_col).alias("vec_id"), quantize_col(F.col(vec_col)).alias("qv")
-    ).join(assigned.select("vec_id", "cluster"), "vec_id")
-    b = int(n_blocks)
-    thr = float(threshold)
-    rows = base.withColumn("blk", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(b)))
-    cells = rows.withColumn(
-        "cell",
-        F.explode(
-            F.concat(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("blk")), lambda i: i * b + F.col("blk")
-                ),
-                F.when(
-                    F.col("blk") < b - 1,
-                    F.transform(
-                        F.sequence(F.col("blk") + 1, F.lit(b - 1)),
-                        lambda j: F.col("blk") * b + j,
-                    ),
-                ).otherwise(F.array().cast("array<bigint>")),
-            )
-        ),
-    )
-
-    def _cluster_cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cluster = int(key[0])
-        ci, cj = divmod(int(key[1]), b)
-        a_side = pdf[pdf["blk"] == ci]
-        b_side = pdf[pdf["blk"] == cj] if ci != cj else a_side
-        empty = pd.DataFrame({"a_id": [], "b_id": [], "cluster": [], "cos_x10000": []})
-        if len(a_side) == 0 or len(b_side) == 0:
-            return empty
-        amat = np.array(a_side["qv"].tolist(), dtype=np.int64)
-        bmat = np.array(b_side["qv"].tolist(), dtype=np.int64)
-        aid = a_side["vec_id"].to_numpy(dtype=np.int64)
-        bid = b_side["vec_id"].to_numpy(dtype=np.int64)
-        anorm = np.sqrt((amat * amat).sum(axis=1).astype(np.float64))
-        bnorm = np.sqrt((bmat * bmat).sum(axis=1).astype(np.float64))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = (amat @ bmat.T).astype(np.float64) / (anorm[:, None] * bnorm[None, :])
-            mask = cos >= thr
-        if ci == cj:
-            mask &= aid[:, None] < bid[None, :]
-        ai, bi = np.nonzero(mask)
-        if len(ai) == 0:
-            return empty
-        a_ids, b_ids = aid[ai], bid[bi]
-        return pd.DataFrame(
-            {
-                "a_id": np.minimum(a_ids, b_ids),
-                "b_id": np.maximum(a_ids, b_ids),
-                "cluster": np.full(len(ai), cluster, dtype=np.int64),
-                "cos_x10000": np.floor(cos[ai, bi] * 10000.0 + 0.5).astype(np.int64),
-            }
-        )
-
-    return cells.groupBy("cluster", "cell").applyInPandas(
-        _cluster_cell_pairs,
-        schema="a_id long, b_id long, cluster long, cos_x10000 long",
-    )
+    rows = embs.select(
+        F.col(id_col).alias("id"), quantize_col(F.col(vec_col)).alias("qv")
+    ).join(assigned.select(F.col("vec_id").alias("id"), "cluster"), "id")
+    return _grid_cosine_pairs(rows, threshold, n_blocks, group_col="cluster")
 
 
 # ---------------------------------------------------------------------------

@@ -131,6 +131,19 @@ def jaccard(a, b) -> float:
     return len(a & b) / len(a | b)
 
 
+def int_cosine(a, b):
+    """All-pairs cosine of two int64 row matrices (quantized vectors): exact
+    int64 norms and matmul, then IEEE sqrt and divide — op-for-op the JVM
+    double arithmetic of search._dot, so the values are bit-identical to the
+    Spark and DuckDB twins. A zero row gives NaN, which fails every >=."""
+    import numpy as np
+
+    an = np.sqrt((a * a).sum(axis=1).astype(np.float64))
+    bn = np.sqrt((b * b).sum(axis=1).astype(np.float64))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (a @ b.T).astype(np.float64) / (an[:, None] * bn[None, :])
+
+
 # ---------------------------------------------------------------------------
 # Union-find canonicalization (driver-side oracle; the Spark pipeline uses the
 # iterative connected-components job in operators/connected_components.py)

@@ -638,12 +638,7 @@ def per_episode_edge_candidates(
     q_uuid, cand_uuid, restricted, rrf_x1e6 (score * 1e6, bigint —
     engine-exact), rank — ties broken by ascending cand_uuid.
     """
-    from graphiti_spark.search import (
-        DEFAULT_MIN_SCORE,
-        _dot,
-        bm25_multi_scores,
-        quantize_col,
-    )
+    from graphiti_spark.search import DEFAULT_MIN_SCORE, bm25_multi_scores
 
     have_vec = (
         "fact_embedding" in new_edges.columns
@@ -682,6 +677,8 @@ def per_episode_edge_candidates(
         import numpy as np
         import pandas as pd
 
+        from graphiti_spark.kernels import int_cosine
+
         min_score = DEFAULT_MIN_SCORE
 
         def _cos_group(key, qdf: pd.DataFrame, cdf: pd.DataFrame):
@@ -699,15 +696,9 @@ def per_episode_edge_candidates(
                 m = np.array([np.asarray(v, dtype=np.float64) for v in col])
                 return (np.sign(m) * np.floor(np.abs(m) * 1000.0 + 0.5)).astype(np.int64)
 
-            q = quant(qdf["fact_embedding"])
-            c = quant(cdf["fact_embedding"])
-            qn = np.sqrt((q * q).sum(axis=1).astype(np.float64))
-            cn = np.sqrt((c * c).sum(axis=1).astype(np.float64))
-            dots = (q @ c.T).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (qn[:, None] * cn[None, :])
-            ok = (qn[:, None] > 0) & (cn[None, :] > 0) & (cos >= min_score)
-            qi, ci = np.nonzero(ok)
+            # a zero-norm side gives NaN, which fails the >= gate
+            cos = int_cosine(quant(qdf["fact_embedding"]), quant(cdf["fact_embedding"]))
+            qi, ci = np.nonzero(cos >= min_score)
             return pd.DataFrame(
                 {
                     "q_uuid": qdf["uuid"].to_numpy()[qi],

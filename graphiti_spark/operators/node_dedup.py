@@ -11,10 +11,11 @@ distribute; the set-oriented equivalent is:
    (group_id, exact-normalized name), so equal names collide by construction
    — no join, no shuffle (D1, D8's exact index).
 2. fuzzy dedup pairs only DISTINCT high-entropy names per group: shingles +
-   minhash + LSH band keys via one vectorized pandas UDF, posexplode of the
-   8 band keys, self-join on (group_id, band_pos, band_key) — the LSH
-   shuffle (D4-D6) — then native array_intersect/array_union Jaccard >= 0.9
-   (D7, D9).
+   minhash + LSH band keys via one vectorized pandas UDF, then
+   operators/pairs.banded_pairs — posexplode of the 8 band keys, the
+   LSH_BUCKET_CAP hot-bucket drop and the self-join on (group_id,
+   band_pos, band_key), the LSH shuffle (D4-D6) — then native
+   array_intersect/array_union Jaccard >= 0.9 (D7, D9).
 3. connected components with min-id canonical (D13/D14).
 
 Scale notes: the fuzzy stage's input is |distinct names per group|, orders
@@ -36,6 +37,7 @@ from graphiti_spark.functions.udfs import (
 )
 from graphiti_spark.kernels import JACCARD_THRESHOLD
 from graphiti_spark.operators.connected_components import connected_components
+from graphiti_spark.operators.pairs import banded_pairs
 
 LSH_BUCKET_CAP = 64  # max names sharing one (group, band) bucket before we skip it
 
@@ -154,45 +156,13 @@ def fuzzy_duplicate_pairs(
             F.col("f.shingles").alias("shingles"),
             F.col("f.band_keys").alias("band_keys"),
         )
+    ).persist()  # read by the bucket sizes AND both pair-join sides
+    feat.count()  # eager: all three consumers appear in downstream actions
+    pairs = banded_pairs(
+        feat, "pre_id", "band_keys", "shingles", LSH_BUCKET_CAP, block_cols=("group_id",)
     )
-    banded = feat.select(
-        "group_id",
-        "pre_id",
-        "shingles",
-        F.posexplode("band_keys").alias("band_pos", "band_key"),
-    ).persist()  # consumed by the size aggregation AND both pair-join sides
-    banded.count()  # eager: all three consumers appear in downstream actions
-    # cap pathological buckets (hub-name skew guard); the capped frame is
-    # NOT re-persisted — both self-join sides re-derive it from the cached
-    # `banded` with one cheap broadcast-size join each, which costs less
-    # than a second eager persist+count barrier
-    bucket_sizes = banded.groupBy("group_id", "band_pos", "band_key").count()
-    banded = banded.join(
-        bucket_sizes.filter(F.col("count") <= LSH_BUCKET_CAP).drop("count"),
-        on=["group_id", "band_pos", "band_key"],
-    )
-    a = banded.select(
-        "group_id",
-        "band_pos",
-        "band_key",
-        F.col("pre_id").alias("a"),
-        F.col("shingles").alias("sh_a"),
-    )
-    b = banded.select(
-        "group_id",
-        "band_pos",
-        "band_key",
-        F.col("pre_id").alias("b"),
-        F.col("shingles").alias("sh_b"),
-    )
-    pairs = (
-        a.join(b, on=["group_id", "band_pos", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sh_a", "sh_b")
-        .dropDuplicates(["a", "b"])
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    inter = F.size(F.array_intersect("a_shingles", "b_shingles"))
+    union = F.size(F.array_union("a_shingles", "b_shingles"))
     jacc = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
     return pairs.withColumn("jaccard", jacc).filter(
         F.col("jaccard") >= F.lit(JACCARD_THRESHOLD)

@@ -40,10 +40,12 @@ BM25_B = 0.75
 
 
 def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, term) posting rows with tf — whitespace tokenization, JVM-side."""
+    """(id, term) posting rows with tf — lowercased whitespace tokenization,
+    JVM-side. Case folds here, on the index side too, so a query term
+    (lowercased by every caller) matches a capitalized name in the text."""
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("term"),
+        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
     return toks.groupBy("doc", "term").agg(F.count("*").alias("tf"))
 
@@ -136,10 +138,9 @@ def bm25_multi_scores(
     query per extracted edge).
 
     corpus: (doc, fact), queries: (q, fact). Both sides tokenized with the
-    SAME whitespace rule (no case folding on either — query text here is
-    itself a stored fact, not user input). A term repeated in a query
-    contributes once per occurrence, matching bm25_search's term-list
-    semantics. Corpus statistics stay inside the plan (1-row aggregate
+    SAME rule as build_bm25_index (`tokenize`: lowercased, whitespace
+    split). A term repeated in a query contributes once per occurrence,
+    matching bm25_search's term-list semantics. Corpus statistics stay inside the plan (1-row aggregate
     cross-join) — no driver action.
 
     Output: q, doc, bm (summed score over shared terms).
@@ -230,15 +231,30 @@ def cosine_topk(
     rnk.
     """
     q = F.broadcast(
-        queries.select(
-            "q_id",
-            quantize_col(F.col("q_vec")).alias("qv"),
-        ).withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv")).cast("double")))
+        normed(queries.select("q_id", quantize_col(F.col("q_vec")).alias("qv")), "q")
     )
-    c = candidates.select(
-        "c_id", quantize_col(F.col("c_vec")).alias("cv")
-    ).withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv")).cast("double")))
-    pairs = c.crossJoin(q).withColumn(
+    c = normed(candidates.select("c_id", quantize_col(F.col("c_vec")).alias("cv")), "c")
+    return cos_rank(c.crossJoin(q), k, min_score, band)
+
+
+def normed(df: DataFrame, side: str) -> DataFrame:
+    """Add `<side>n`, the L2 norm of the quantized vector `<side>v` — once
+    per row, before the pair join multiplies the rows."""
+    v = F.col(f"{side}v")
+    return df.withColumn(f"{side}n", F.sqrt(_dot(v, v).cast("double")))
+
+
+def cos_rank(
+    pairs: DataFrame,
+    k: int,
+    min_score: float | None = None,
+    band: tuple[float, float] | None = None,
+) -> DataFrame:
+    """The exact-cosine rerank every kNN operator ends in. pairs: q_id,
+    c_id, qv/cv (quantized vectors) and qn/cn (their norms, see `normed`).
+    Output: q_id, c_id, cos (double), rnk — the top k per q_id by cos desc,
+    ties to the smaller c_id."""
+    pairs = pairs.withColumn(
         "cos", _dot(F.col("qv"), F.col("cv")).cast("double") / (F.col("qn") * F.col("cn"))
     )
     if min_score is not None:

@@ -86,6 +86,24 @@ def test_facade_end_to_end(spark, tmp_path):
     g.close()
 
 
+def test_search_bare_capitalized_name(spark, tmp_path):
+    """BM25 folds case on the index side too: a bare capitalized entity
+    name, with no relation phrase and no cosine leg to fall back on, finds
+    the edge ingested for it."""
+    g = GraphitiSpark(spark, str(tmp_path / "graph"), with_embeddings=False)
+    g.add_episode(
+        name="https://manual.example/steel",
+        episode_body="Maria Steel works at Initech Corp.",
+        reference_time=NOW,
+        group_id="manual",
+    )
+    edges = {r["uuid"]: r["fact"] for r in g.store.read("edges").collect()}
+    assert any("Maria Steel" in fact for fact in edges.values())
+    hits = [r["uuid"] for r in g.search("Maria Steel", num_results=5).collect()]
+    assert hits and all("Maria Steel" in edges[u] for u in hits)
+    g.close()
+
+
 def test_remove_episode_partition_restricted(spark, tmp_path):
     """The cascade delete rewrites ONLY the episode's group_id partition:
     every other group's files stay byte-identical across all four tables

@@ -46,17 +46,37 @@ def test_column_pruning_drops_html_when_text_only(spark, pages_path):
     assert "html" not in read_schema, f"html must be pruned: {read_schema}"
 
 
-def test_distributed_fuzzy_band_join_no_cartesian(spark, pages_path):
-    """The distributed LSH leg (what runs at 100x) must pair names through
-    the (group, band_pos, band_key) equi-join — a plan regression to a
-    cartesian/nested-loop would be quadratic in distinct names."""
+def _fuzzy_band_pairs(pages):
     from graphiti_spark.functions.udfs import extract_mentions_df
     from graphiti_spark.operators.node_dedup import fuzzy_duplicate_pairs, name_keys
 
-    pages = spark.read.parquet(pages_path)
     keys = name_keys(extract_mentions_df(pages_to_episodes(pages)))
-    pairs = fuzzy_duplicate_pairs(keys, driver_threshold=0)  # force distributed
-    plan = _plan(pairs)
+    return fuzzy_duplicate_pairs(keys, driver_threshold=0)  # force distributed
+
+
+def _minhash_band_pairs(pages):
+    from graphiti_spark.dataops import minhash_neardup_pairs
+
+    return minhash_neardup_pairs(pages.select(F.col("url").alias("doc_id"), "text"))
+
+
+def _simhash_band_pairs(pages):
+    from graphiti_spark.dataops import simhash_neardup_pairs
+
+    return simhash_neardup_pairs(pages.select(F.col("url").alias("doc_id"), "text"))
+
+
+@pytest.mark.parametrize(
+    "band_pairs",
+    [_fuzzy_band_pairs, _minhash_band_pairs, _simhash_band_pairs],
+    ids=["fuzzy", "minhash", "simhash"],
+)
+def test_distributed_fuzzy_band_join_no_cartesian(spark, pages_path, band_pairs):
+    """Every banded caller (the distributed fuzzy name leg, minhash and
+    simhash doc dedup — what runs at 100x) must pair rows through the
+    (block, band_pos, band_key) equi-join of operators.pairs.banded_pairs —
+    a plan regression to a cartesian/nested-loop would be quadratic."""
+    plan = _plan(band_pairs(spark.read.parquet(pages_path)))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 

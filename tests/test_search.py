@@ -219,13 +219,14 @@ def test_bm25_index_is_cached_and_closable(spark):
 
 def test_bm25_multi_scores_matches_single_query(spark):
     """The batch form must reproduce bm25_search's summed scores for each
-    query run individually (same tokenization, no case folding on either
-    side here, so use lowercase facts)."""
+    query run individually (same tokenization; both fold case, so the
+    capitalized d5 matches the lowercase query term "alice")."""
     import graphiti_spark.search as S
 
     corpus = spark.createDataFrame(
         [("d1", "alice works at acme"), ("d2", "bob works at globex"),
-         ("d3", "alice married bob"), ("d4", "carol sleeps")],
+         ("d3", "alice married bob"), ("d4", "carol sleeps"),
+         ("d5", "Alice Smith founded Initech")],
         ["doc", "fact"],
     )
     queries = spark.createDataFrame(
@@ -242,6 +243,7 @@ def test_bm25_multi_scores_matches_single_query(spark):
         }
         got = {d: s for (q, d), s in batch.items() if q == qid}
         assert set(got) == set(single)
+        assert qid != "q1" or "d5" in got
         for d in single:
             assert abs(got[d] - single[d]) < 1e-12
 
