@@ -144,6 +144,52 @@ def int_cosine(a, b):
         return (a @ b.T).astype(np.float64) / (an[:, None] * bn[None, :])
 
 
+NO_TIME = (1 << 63) - 1  # int64 max: "no timestamp" in invalidation_mins
+
+
+def invalidation_mins(kh, dh, rank, valid, ext, query, max_cells=1 << 22):
+    """T6/T7 per-edge minimums over contradiction domains (the kernel of
+    edge_ops.invalidation_map). Rows are edges: domain hash `kh`, target
+    hash `dh`, arrival rank `rank` within the domain, `valid` and
+    extracted-invalid `ext` as int64 microseconds (NO_TIME = null). Every
+    row is a candidate c; each `query` row E gets
+
+      self_min  = min valid_c : dh_c != dh_E, valid_c > valid_E, rank_c < rank_E
+      later_min = min valid_c : dh_c != dh_E, valid_c > valid_E, rank_c > rank_E,
+                                ext_c > valid_E
+
+    by pairwise compares within E's domain, at most `max_cells` cells per
+    chunk. Returns (row index, self_min, later_min) for the query rows with
+    at least one minimum; a missing minimum is NO_TIME."""
+    import numpy as np
+
+    order = np.argsort(kh, kind="stable")
+    ks = kh[order]
+    starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+    ends = np.r_[starts[1:], len(ks)]
+    out = []
+    for s, e in zip(starts, ends):
+        seg = order[s:e]
+        qs = seg[query[seg]]
+        c_dh, c_r, c_v, c_ext = dh[seg], rank[seg], valid[seg], ext[seg]
+        step = max(1, max_cells // len(seg))
+        for i in range(0, len(qs), step):
+            q = qs[i : i + step]
+            q_v = valid[q][:, None]
+            hit = (c_dh != dh[q][:, None]) & (c_v > q_v)
+            q_r = rank[q][:, None]
+            self_min = np.where(hit & (c_r < q_r), c_v, NO_TIME).min(axis=1)
+            later_min = np.where(
+                hit & (c_r > q_r) & (c_ext > q_v), c_v, NO_TIME
+            ).min(axis=1)
+            keep = (self_min != NO_TIME) | (later_min != NO_TIME)
+            out.append((q[keep], self_min[keep], later_min[keep]))
+    if not out:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, empty
+    return tuple(np.concatenate(parts) for parts in zip(*out))
+
+
 # ---------------------------------------------------------------------------
 # Union-find canonicalization (driver-side oracle; the Spark pipeline uses the
 # iterative connected-components job in operators/connected_components.py)

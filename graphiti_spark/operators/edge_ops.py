@@ -14,6 +14,11 @@
   guards of resolve_edge_contradictions (ref edge_operations.py:393-423)
   and the new-edge self-expiry rule (:585-598). Sequential and set-based
   evaluation agree except on second-order arrival effects (see oracle.py).
+  The guard reads only a contradicting edge's extracted invalid_at (its
+  self-expiry value always lies above the edge's own valid_at, so it
+  always passes), which makes self-expiry and later truncation two
+  independent minimums: one grouped numpy pass per contradiction domain
+  computes both, with hub domains split into arrival-rank blocks.
 """
 
 from __future__ import annotations
@@ -352,21 +357,17 @@ def apply_edge_merge(edges: DataFrame, canon: DataFrame, n_pairs: int) -> DataFr
     )
 
 
-SALT_FAST_PATH_MAX = 1_000_000  # below this, plain join + recompute wins
-
 # invalidation maps up to this many rows are broadcast when applied, so the
 # full-width edge table never crosses an exchange for the final assembly
 INV_MAP_BROADCAST_MAX = 4_000_000
 
+# contradiction domains with more edges than this are split into arrival-
+# rank blocks of this size, one pandas group each (the hub strategy)
+HUB_BLOCK_ROWS = 10_000
 
-def invalidation_map(
-    edges: DataFrame,
-    num_salts: int = 8,
-    hot_threshold: int = 10_000,
-    known_edge_count: int | None = None,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """T6/T7 interval algebra over contradicting-edge pairs — the exact
+
+def invalidation_map(edges: DataFrame) -> DataFrame:
+    """T6/T7 interval algebra over contradicting edges — the exact
     set-based form of the reference's sequential per-arrival rules
     (ref edge_operations.py:393-423 contradiction loop, :585-598 new-edge
     self-expiry), reproduced against an explicit arrival order so the
@@ -382,147 +383,104 @@ def invalidation_map(
     judgment, SURVEY.md §2.4 T5): same (group_id, source, predicate),
     different target, both valid_at non-null. Arrival order is
     (created_at, arr_episode, arr_idx) when dedup_edges' tiebreak columns
-    are present, else (valid_at, uuid). Arrival ties are impossible:
-    distinct deduped edges have distinct winner (episode, triple_idx), and
-    the fallback includes the unique uuid — so the pair set carries a
-    single exact `earlier` boolean instead of two arrival structs (the
-    struct payload, with its episode-uuid strings, dominated the
-    checkpoint size of the ~5-pairs-per-edge pair set at scale).
+    are present, else (valid_at, uuid); arrival ties are impossible
+    (distinct deduped edges have distinct winner (episode, triple_idx), and
+    the fallback ends in the unique uuid), so a per-domain row_number is
+    the whole arrival order.
 
     Per edge E with contradiction set C:
     1. post-arrival invalid A(E) = E's extracted invalid_at if set (an
        extracted end date is authoritative at arrival — ref :581-583 sets
-       expired and skips self-expiry); else min{c.valid : c arrived before
-       E, c.valid > E.valid} (self-expiry, :585-598 — no guards).
-    2. later-arrived contradictions truncate further: min{c.valid :
-       c arrived after E, c.valid > E.valid, A(c) null or > E.valid}
-       (the :402-413 disjointness guard, evaluated against c's own
-       post-arrival invalid exactly as the sequential loop sees it).
-    3. invalid_at = least(A(E), that minimum); expired_at = now iff set.
+       expired and skips self-expiry); else _self_min(E) = min{c.valid :
+       c arrived before E, c.valid > E.valid} (self-expiry, :585-598).
+    2. later-arrived contradictions truncate further: _later_min(E) =
+       min{c.valid : c arrived after E, c.valid > E.valid, A(c) null or >
+       E.valid} (the :402-413 disjointness guard, evaluated against c's
+       own post-arrival invalid exactly as the sequential loop sees it).
+    3. invalid_at = least(A(E), _later_min(E)); expired_at = now iff set.
 
-    The self-join key (group_id, source, predicate) is dominated by hub
-    entities, so it goes through the explicit salted join (operators/skew)
-    with a SAMPLED hot-key probe: keys with more than `hot_threshold`
-    edges are split over `num_salts` shuffle partitions; the result is
-    row-identical to the plain join. The contradicting-pair set is
-    localCheckpointed (one job) because two aggregation phases consume it;
-    it is tiny relative to the edge table (only same-key different-target
-    pairs with ordered valid_at survive).
+    The guard needs only c's EXTRACTED invalid_at, so both minimums come
+    from one pass: A(c) = coalesce(ext_c, _self_min(c)), and _self_min(c)
+    is a minimum over values above c.valid, while phase 2 only looks at c
+    with c.valid > E.valid — so a non-null _self_min(c) always passes the
+    guard, and "A(c) null or A(c) > E.valid" equals "ext_c null or ext_c >
+    E.valid". No contradiction-pair set is ever materialized.
 
-    Scale-adaptive (same pattern as connected_components' driver path):
-    when the caller proves the input is small (`known_edge_count` below
-    SALT_FAST_PATH_MAX) the hot-key probe job and the pair checkpoint job
-    are skipped — a plain join recomputed by both phases is cheaper than
-    two extra job barriers at that size, and AQE's skew splitting still
-    covers it. The result is row-identical on every path.
+    Execution: one window over the domain hash ranks arrivals and counts
+    the domain; singleton domains drop out; then one
+    groupBy(pmod(domain, defaultParallelism), block).applyInPandas runs
+    kernels.invalidation_mins, which compares each domain's rows pairwise
+    in bounded chunks. The pmod bucket batches many small domains into one
+    Python call. A hub domain with n > HUB_BLOCK_ROWS edges is split into
+    ceil(n / HUB_BLOCK_ROWS) arrival-rank blocks: every edge is a
+    candidate in every block of its domain, and a query in its own block
+    only, so each block is its own pandas group and task. Timestamps cross
+    the Arrow boundary as unix-microsecond longs (no timezone conversion).
     """
-    from graphiti_spark.operators.skew import salted_join
+    import pandas as pd
+
+    from graphiti_spark.kernels import NO_TIME, invalidation_mins
 
     has_arr = "arr_episode" in edges.columns and "arr_idx" in edges.columns
-    small = known_edge_count is not None and known_edge_count <= SALT_FAST_PATH_MAX
+    block = HUB_BLOCK_ROWS
+    par = edges.sparkSession.sparkContext.defaultParallelism
 
     # The contradiction domain (group_id, source, predicate) is ~90 B of
-    # mostly uuid-hex strings and keys the window AND the self-join, so it
+    # mostly uuid-hex strings and keys the window AND the grouping, so it
     # travels as one xxhash64; the target uuid is only ever compared for
     # inequality, so it travels hashed too. A 2^-64 key collision could
-    # alias two domains (a false contradiction pair) or two targets (a
-    # missed one) — the same accepted-risk class as dedup_edges' fact_key;
-    # within a true domain, row_number ranks keep their relative order even
-    # if a collision interleaves two domains in one window partition.
-    kh_expr = F.xxhash64("group_id", "source_node_uuid", "name")
-    kh = kh_expr.alias("kh")
-
-    # arrival ORDER is all the algebra needs, and comparisons only ever
-    # happen between edges sharing the join key — so a per-key row_number
-    # over the arrival tuple replaces the tuple itself. The self-join's
-    # two sides then project from ONE window child: a single narrow
-    # exchange (reused by both sides) instead of two exchanges dragging
-    # episode-uuid strings, and `earlier` is an integer compare. Ranks are
-    # deterministic: distinct deduped edges have distinct winner
-    # (episode, triple_idx), and the fallback order ends in the unique uuid.
+    # alias two domains (a false contradiction) or two targets (a missed
+    # one) — the same accepted-risk class as dedup_edges' fact_key.
+    kh = F.xxhash64("group_id", "source_node_uuid", "name")
     order_cols = (
         [F.col("created_at"), F.col("arr_episode"), F.col("arr_idx")]
         if has_arr
         else [F.col("valid_at"), F.col("uuid")]
     )
-    base = edges.select(
-        "uuid", kh, F.xxhash64("target_node_uuid").alias("dh"), "valid_at",
-        F.row_number()
-        .over(Window.partitionBy(kh_expr).orderBy(*order_cols))
-        .alias("arr_rank"),
-    )
-    e2 = base.select(
-        "kh",
-        F.col("uuid").alias("uuid2"),
-        F.col("dh").alias("dh2"),
-        F.col("valid_at").alias("valid2"),
-        F.col("arr_rank").alias("rank2"),
-    )
-    left = base
-    if small:
-        joined = left.join(e2, on="kh", how="inner")
-    else:
-        joined = salted_join(
-            left, e2, on=["kh"], salt_col="uuid",
-            num_salts=num_salts, hot_threshold=hot_threshold,
-            known_left_count=known_edge_count,
-            probe_sample=0.02,
-            probe_frame=edges.select(kh),
+    domain = Window.partitionBy(kh)
+    rows = (
+        edges.filter(F.col("valid_at").isNotNull())
+        .select(
+            "uuid",
+            kh.alias("kh"),
+            F.xxhash64("target_node_uuid").alias("dh"),
+            F.row_number().over(domain.orderBy(*order_cols)).alias("r"),
+            F.count(F.lit(1)).over(domain).alias("n"),
+            F.unix_micros("valid_at").alias("v"),
+            F.coalesce(F.unix_micros("invalid_at"), F.lit(NO_TIME)).alias("ext"),
         )
-    pairs = joined.filter(
-        (F.col("dh") != F.col("dh2"))
-        & F.col("valid2").isNotNull()
-        & F.col("valid_at").isNotNull()
-        & (F.col("valid2") > F.col("valid_at"))
-    ).select(
-        "uuid", "uuid2", "valid_at", "valid2",
-        (F.col("rank2") < F.col("arr_rank")).alias("earlier"),
-    )
-    # two aggregation phases read this; materialize so the (salted) join
-    # runs once — paying one extra job barrier beats re-running the window
-    # + self-join chain for phase 2 at every size (the pair set is tiny
-    # relative to the edge table on both paths). With a cache_registry
-    # (the pipeline's per-run cache list) the pairs persist through the
-    # caller's release() — the form streaming's per-micro-batch soak
-    # guarantee needs; standalone callers get a localCheckpoint whose
-    # blocks the JVM releases on GC.
-    if cache_registry is not None:
-        pairs = pairs.persist()
-        cache_registry.append(pairs)
-        pairs.count()
-    else:
-        pairs = pairs.localCheckpoint(eager=True)
-
-    # phase 1 — self-expiry: min later-valid among EARLIER-arrived
-    # contradictions; applies only when no extracted invalid_at exists
-    self_min = (
-        pairs.filter(F.col("earlier"))
-        .groupBy("uuid")
-        .agg(F.min("valid2").alias("_self_min"))
-    )
-    # A(c) for the phase-2 guard: only edges with a non-null post-arrival
-    # invalid matter (null passes the guard), so this stays a small table
-    ext = edges.filter(F.col("invalid_at").isNotNull()).select(
-        "uuid", F.col("invalid_at").alias("_ext")
-    )
-    a_map = (
-        ext.join(self_min, on="uuid", how="full")
-        .select("uuid", F.coalesce("_ext", "_self_min").alias("_a"))
+        .filter(F.col("n") > 1)
+        .withColumn(
+            "blk",
+            F.explode(F.sequence(F.lit(0), ((F.col("n") - 1) / block).cast("int"))),
+        )
+        .withColumn("q", F.col("blk") == ((F.col("r") - 1) / block).cast("int"))
+        .withColumn("bucket", F.pmod(F.col("kh"), F.lit(par)))
     )
 
-    # phase 2 — later-arrived contradictions, guarded by A(c)
-    later_min = (
-        pairs.filter(~F.col("earlier"))
-        .join(
-            a_map.select(F.col("uuid").alias("uuid2"), F.col("_a").alias("_a2")),
-            on="uuid2",
-            how="left",
+    def _mins(pdf: pd.DataFrame) -> pd.DataFrame:
+        idx, self_min, later_min = invalidation_mins(
+            pdf["kh"].to_numpy(), pdf["dh"].to_numpy(), pdf["r"].to_numpy(),
+            pdf["v"].to_numpy(), pdf["ext"].to_numpy(), pdf["q"].to_numpy(),
         )
-        .filter(F.col("_a2").isNull() | (F.col("_a2") > F.col("valid_at")))
-        .groupBy("uuid")
-        .agg(F.min("valid2").alias("_later_min"))
+        return pd.DataFrame(
+            {
+                "uuid": pdf["uuid"].to_numpy()[idx],
+                "_self_min": self_min,
+                "_later_min": later_min,
+            }
+        )
+
+    mins = rows.groupBy("bucket", "blk").applyInPandas(
+        _mins, "uuid string, _self_min long, _later_min long"
     )
-    return self_min.join(later_min, on="uuid", how="full")
+    return mins.select(
+        "uuid",
+        *(
+            F.timestamp_micros(F.nullif(c, F.lit(NO_TIME))).alias(c)
+            for c in ("_self_min", "_later_min")
+        ),
+    )
 
 
 def apply_invalidation(
@@ -556,17 +514,11 @@ def apply_invalidation(
     return out
 
 
-def invalidate_contradictions(
-    edges: DataFrame,
-    now_ts,
-    num_salts: int = 8,
-    hot_threshold: int = 10_000,
-) -> DataFrame:
+def invalidate_contradictions(edges: DataFrame, now_ts) -> DataFrame:
     """T6/T7 temporal invalidation — see `invalidation_map` for the full
     algebra and `apply_invalidation` for the fold-back. This wrapper keeps
     the one-call contract the driver-oracle entries use."""
-    inv = invalidation_map(edges, num_salts, hot_threshold)
-    return apply_invalidation(edges, inv, now_ts)
+    return apply_invalidation(edges, invalidation_map(edges), now_ts)
 
 
 RELATED_EDGE_LIMIT = 10  # ref search/search_config.py DEFAULT_SEARCH_LIMIT

@@ -113,6 +113,7 @@ def fuzzy_duplicate_pairs(
     keys: DataFrame,
     driver_threshold: int | None = None,
     known_count: int | None = None,
+    cache_registry: list | None = None,
 ) -> DataFrame:
     """LSH band join + Jaccard >= 0.9 over high-entropy distinct names.
     Returns pairs(a, b) of pre_ids (a < b), within the same group only.
@@ -121,7 +122,8 @@ def fuzzy_duplicate_pairs(
     from the in-process kernel twin (zero further jobs); above it the
     distributed LSH band join below runs. Callers that already counted the
     (persisted) keys pass `known_count` so the distributed path never pays
-    a probe collect."""
+    a probe collect. `cache_registry`: as in resolve_names — the
+    distributed path's persisted feature frame is appended to it."""
     # None -> module constant, resolved at CALL time so tests can force the
     # distributed branch by monkeypatching DRIVER_FUZZY_MAX_KEYS to 0
     if driver_threshold is None:
@@ -157,6 +159,8 @@ def fuzzy_duplicate_pairs(
             F.col("f.band_keys").alias("band_keys"),
         )
     ).persist()  # read by the bucket sizes AND both pair-join sides
+    if cache_registry is not None:
+        cache_registry.append(feat)
     feat.count()  # eager: all three consumers appear in downstream actions
     pairs = banded_pairs(
         feat, "pre_id", "band_keys", "shingles", LSH_BUCKET_CAP, block_cols=("group_id",)
@@ -176,9 +180,9 @@ def resolve_names(
 ) -> DataFrame:
     """Global canonicalization map: one row per distinct (group_id, name key).
 
-    `cache_registry`: optional list the internal key cache is appended to,
-    so a long-lived caller (streaming foreachBatch) can unpersist it after
-    the resolution output is materialized.
+    `cache_registry`: optional list the internal key and feature caches are
+    appended to, so a long-lived caller (streaming foreachBatch) can
+    unpersist them after the resolution output is materialized.
 
     Returns name_resolution(group_id, norm_exact, name, entity_types,
     canonical_id) — the D15 pointer-rewrite map.
@@ -227,7 +231,9 @@ def resolve_names(
         new_pool = keys.filter(F.col("ex_uuid").isNull()).select(
             "group_id", "norm_exact", "name", "entity_types", "pre_id"
         )
-        pairs = fuzzy_duplicate_pairs(new_pool.unionByName(ex_pool))
+        pairs = fuzzy_duplicate_pairs(
+            new_pool.unionByName(ex_pool), cache_registry=cache_registry
+        )
         # existing uuids must win as canonical: prefix-priority remap — an
         # existing id sorts before any content-hash pre_id via a marker
         ex_ids = existing_nodes.select(F.col("uuid").alias("id")).distinct()
@@ -268,7 +274,9 @@ def resolve_names(
     if cache_registry is not None:
         cache_registry.append(keys)
     n_keys = keys.count()
-    pairs = fuzzy_duplicate_pairs(keys, known_count=n_keys)
+    pairs = fuzzy_duplicate_pairs(
+        keys, known_count=n_keys, cache_registry=cache_registry
+    )
     canon = connected_components(pairs)  # (id, canonical) for paired ids only
 
     return keys.join(canon, keys.pre_id == canon.id, how="left").select(

@@ -259,20 +259,18 @@ def _resolve_and_assemble(
     # temporal columns computed against that full set.
     #
     # Both stages materialize only a SMALL map: the per-uuid invalidation
-    # map and the near-dup canonical map. They derive from the deduped
-    # table and touch disjoint columns (invalidation never changes uuid,
-    # endpoints or fact embeddings), so they run concurrently. The
-    # full-width edge table is never cached again after edges_dedup:
-    # invalidation folds in through a broadcast join and the merge chains
-    # on top, materialized once by the `edges` stage. The result is
-    # identical to merge_near_duplicate_edges(invalidate_contradictions(.)).
+    # map (one grouped pass over the contradiction domains, no pair set
+    # and no intermediate cache) and the near-dup canonical map. They
+    # derive from the deduped table and touch disjoint columns
+    # (invalidation never changes uuid, endpoints or fact embeddings), so
+    # they run concurrently. The full-width edge table is never cached
+    # again after edges_dedup: invalidation folds in through a broadcast
+    # join and the merge chains on top, materialized once by the `edges`
+    # stage. The result is identical to
+    # merge_near_duplicate_edges(invalidate_contradictions(.)).
     inv_map, canon = runner.run_concurrently(
         in_fp,
-        edges_invalidate=lambda: invalidation_map(
-            deduped,
-            known_edge_count=runner.rows["edges_dedup"],
-            cache_registry=runner.persisted,
-        ),
+        edges_invalidate=lambda: invalidation_map(deduped),
         edges_canon_map=lambda: near_dup_canonical_map(deduped)[0],
     )
 

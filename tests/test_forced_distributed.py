@@ -4,10 +4,11 @@ Every scale-adaptive operator has a driver-side fast path (probe fits on
 the driver) and a distributed path (what actually runs at 100x). The
 distributed branches are covered piecemeal by test_connected_components /
 test_skew; THIS test runs the whole pipeline end-to-end with every
-driver-path threshold forced to 0 — distributed LSH band join (D4-D9),
-distributed min-label CC with pointer jumping (D13/D14), cached/salted
-invalidation (T6) and the persisted near-dup pair DAG (T4/T5) — and
-asserts the output triple set is IDENTICAL to the default path's.
+driver-path threshold forced to 0 and the invalidation hub block forced to
+2 rows — distributed LSH band join (D4-D9), distributed min-label CC with
+pointer jumping (D13/D14), arrival-rank hub blocks in every multi-edge
+contradiction domain (T6) and the persisted near-dup pair DAG (T4/T5) —
+and asserts the output triple set is IDENTICAL to the default path's.
 The near-miss fuzzy band (shingle Jaccard just above and just below 0.9)
 is checked on both paths against a Python replay of the kernels."""
 
@@ -65,7 +66,7 @@ def _edge_tuples(result) -> set:
 def _force_distributed(monkeypatch):
     monkeypatch.setattr(node_dedup, "DRIVER_FUZZY_MAX_KEYS", 0)
     monkeypatch.setattr(cc_mod, "DRIVER_CC_MAX_PAIRS", 0)
-    monkeypatch.setattr(edge_ops, "SALT_FAST_PATH_MAX", 0)
+    monkeypatch.setattr(edge_ops, "HUB_BLOCK_ROWS", 2)
 
 
 def test_forced_distributed_matches_default_fuzzy_closed(spark, monkeypatch):
@@ -87,8 +88,8 @@ def test_forced_distributed_matches_default_fuzzy_closed(spark, monkeypatch):
 
 
 def test_forced_distributed_matches_default_generated(spark, monkeypatch):
-    """Generated web corpus WITH embeddings: exercises the salted
-    invalidation self-join and the persisted near-dup pair DAG (nonzero
+    """Generated web corpus WITH embeddings: exercises the hub-block
+    invalidation split and the persisted near-dup pair DAG (nonzero
     cosine merge pairs), against the driver path."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = generate_web_pages(n_pages=400, seed=42)

@@ -177,3 +177,23 @@ def test_line_dedup_no_cartesian(spark):
     )
     plan = _plan(D.line_dedup(docs))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_invalidation_map_job_fence(spark):
+    """invalidation_map is one window, one grouped pandas pass and the
+    result: counting its map issues at most 5 Spark jobs. A new probe
+    collect, count or cached intermediate in the stage shows up here."""
+    from test_skew import INV_SCHEMA, _inv_edges
+
+    from graphiti_spark.operators.edge_ops import invalidation_map
+
+    edges = spark.createDataFrame(_inv_edges(), schema=INV_SCHEMA)
+    sc = spark.sparkContext
+    group = "invalidation_map_job_fence"
+    sc.setJobGroup(group, "invalidation_map job fence")
+    try:
+        assert invalidation_map(edges).count() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, jobs

@@ -1,48 +1,103 @@
-"""Salted join must be row-identical to the plain join (hub-key skew
-handling, north-rule requirement)."""
+"""Hub-domain invalidation and the near-duplicate edge operators.
+
+`invalidation_map` splits a contradiction domain with more than
+HUB_BLOCK_ROWS edges into arrival-rank blocks; with blocks or without, its
+map must equal a brute-force Python replay of the full two-phase algebra,
+in which the later-arrival guard reads each contradicting edge's
+post-arrival invalid A(c) = coalesce(extracted invalid_at, self-expiry)."""
 
 import random
+from datetime import datetime, timedelta, timezone
 
-from graphiti_spark.operators.skew import salted_join
+import pytest
+from pyspark.sql import functions as F
 
-
-def _frames(spark):
-    rng = random.Random(5)
-    # one hot key ("hub") with 200 rows, many cold keys
-    left_rows = [("hub", f"u{i}", i) for i in range(200)]
-    left_rows += [(f"k{rng.randint(0, 30)}", f"v{i}", i) for i in range(100)]
-    right_rows = [("hub", "H1"), ("hub", "H2")]
-    right_rows += [(f"k{i}", f"R{i}") for i in range(31)]
-    right_rows += [("only_right", "X")]
-    left = spark.createDataFrame(left_rows, schema="k string, uuid string, n long")
-    right = spark.createDataFrame(right_rows, schema="k string, payload string")
-    return left, right
+from graphiti_spark.operators import edge_ops
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+INV_SCHEMA = (
+    "uuid string, group_id string, source_node_uuid string, "
+    "target_node_uuid string, name string, created_at timestamp, "
+    "arr_episode string, arr_idx int, valid_at timestamp, invalid_at timestamp"
+)
 
 
-def test_salted_inner_matches_plain(spark):
-    left, right = _frames(spark)
-    plain = left.join(right, on=["k"], how="inner")
-    salted = salted_join(left, right, on=["k"], salt_col="uuid", hot_threshold=50, num_salts=4)
-    assert _rows(salted.select(*plain.columns)) == _rows(plain)
+def _inv_edges(seed=5):
+    """Several random domains plus one 11-edge hub domain (4 blocks at block
+    size 3) and one planted guard domain. Targets repeat within a domain,
+    valid_at days tie, some valid_at are null and some extracted invalid_at
+    fall at or below other edges' valid_at."""
+    rng = random.Random(seed)
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    day = lambda d: None if d is None else t0 + timedelta(days=d)  # noqa: E731
+    domains = [("g1", "hub", "WORKS_AT", 11)] + [
+        (g, f"s{i}", p, rng.randint(2, 6))
+        for i, (g, p) in enumerate([("g1", "WORKS_AT"), ("g1", "LIVES_IN"),
+                                    ("g2", "WORKS_AT"), ("g2", "WORKS_AT"),
+                                    ("g1", "WORKS_AT")])
+    ]
+    rows = []
+    for g, src, pred, n in domains:
+        for _ in range(n):
+            k = len(rows)
+            valid = rng.choice([None, 0, 1, 2, 2, 3, 4, 5, 6])
+            ext = rng.choice([None, None, None, 1, 2, 3, 5])
+            rows.append((
+                f"e{k:03d}", g, src, f"t{rng.randint(0, 3)}", pred,
+                day(rng.randint(0, 4)), f"ep{rng.randint(0, 2)}", k,
+                day(valid), day(ext),
+            ))
+    # planted guard case: both later arrivals end (extracted) at or before
+    # e_guard's valid_at, so neither may truncate it
+    rows += [
+        ("e_guard", "g3", "s9", "t0", "WORKS_AT", day(0), "ep0", 100, day(3), None),
+        ("e_below", "g3", "s9", "t1", "WORKS_AT", day(1), "ep0", 101, day(5), day(2)),
+        ("e_at", "g3", "s9", "t2", "WORKS_AT", day(2), "ep0", 102, day(6), day(3)),
+    ]
+    return rows
 
 
-def test_salted_left_matches_plain(spark):
-    left, right = _frames(spark)
-    plain = left.join(right, on=["k"], how="left")
-    salted = salted_join(left, right, on=["k"], how="left", salt_col="uuid",
-                         hot_threshold=50, num_salts=4)
-    assert _rows(salted.select(*plain.columns)) == _rows(plain)
+def _replay(rows, guard=True):
+    """Brute-force T6/T7: arrival is (created_at, arr_episode, arr_idx);
+    A(c) = ext_c if set, else c's self-expiry minimum."""
+    edges = [r for r in rows if r[8] is not None]
+    arr = {r[0]: (r[5], r[6], r[7]) for r in edges}
+
+    def contra(e):
+        return [c for c in edges if c[1:3] == e[1:3] and c[4] == e[4]
+                and c[3] != e[3] and c[8] > e[8]]
+
+    self_min = {e[0]: min((c[8] for c in contra(e) if arr[c[0]] < arr[e[0]]),
+                          default=None) for e in edges}
+    a = {e[0]: e[9] if e[9] is not None else self_min[e[0]] for e in edges}
+    out = {}
+    for e in edges:
+        later = min((c[8] for c in contra(e) if arr[c[0]] > arr[e[0]]
+                     and (not guard or a[c[0]] is None or a[c[0]] > e[8])),
+                    default=None)
+        if self_min[e[0]] is not None or later is not None:
+            out[e[0]] = (self_min[e[0]], later)
+    us = lambda t: None if t is None else int(t.timestamp()) * 1_000_000  # noqa: E731
+    return {k: (us(s), us(lt)) for k, (s, lt) in out.items()}
 
 
-def test_no_hot_keys_passthrough(spark):
-    left, right = _frames(spark)
-    plain = left.join(right, on=["k"], how="inner")
-    salted = salted_join(left, right, on=["k"], salt_col="uuid", hot_threshold=10_000)
-    assert _rows(salted.select(*plain.columns)) == _rows(plain)
+@pytest.mark.parametrize("block", [None, 3], ids=["default_block", "block3"])
+def test_invalidation_map_matches_replay(spark, monkeypatch, block):
+    if block is not None:
+        monkeypatch.setattr(edge_ops, "HUB_BLOCK_ROWS", block)
+    rows = _inv_edges()
+    assert sum(r[2] == "hub" and r[8] is not None for r in rows) > 2 * 3
+    expected = _replay(rows)
+    # the data exercises the guard: dropping it changes the map
+    assert expected != _replay(rows, guard=False)
+    assert any(s is not None for s, _ in expected.values())
+    edges = spark.createDataFrame(rows, schema=INV_SCHEMA)
+    rows = edge_ops.invalidation_map(edges).select(
+        "uuid", F.unix_micros("_self_min"), F.unix_micros("_later_min")
+    ).collect()
+    got = {r[0]: (r[1], r[2]) for r in rows}
+    assert len(got) == len(rows)  # one row per edge, whatever its blocks
+    assert got == expected
 
 
 def test_near_duplicate_edge_pairs(spark):
@@ -160,3 +215,23 @@ def test_canonical_map_probe_path(spark):
     assert n_pairs == 2
     got = sorted(tuple(r) for r in canon.collect())
     assert got == [("e1", "e1"), ("e2", "e1"), ("e4", "e4"), ("e5", "e4")]
+
+
+def test_invalidation_mins_chunk_size_invariant():
+    """The kernel's chunking only bounds memory: one query row per chunk
+    gives the same minimums as one chunk per domain."""
+    import numpy as np
+
+    from graphiti_spark.kernels import NO_TIME, invalidation_mins
+
+    rng = np.random.default_rng(5)
+    n = 200
+    cols = (
+        rng.integers(0, 4, n), rng.integers(0, 3, n), rng.permutation(n),
+        rng.integers(0, 10, n), np.where(rng.random(n) < 0.3, rng.integers(0, 10, n), NO_TIME),
+        rng.random(n) < 0.7,
+    )
+    whole = invalidation_mins(*cols)
+    assert len(whole[0]) > 0
+    for got, want in zip(invalidation_mins(*cols, max_cells=1), whole):
+        assert np.array_equal(got, want)
