@@ -47,7 +47,6 @@ class StageRunner:
         self.spark = spark
         self.dir = checkpoint_dir
         self.metrics: list[dict] = []
-        self.rows: dict[str, int] = {}  # stage -> materialized row count
         # every frame persist()ed by in-memory stages (plus operator-internal
         # caches registered by the pipeline); released by the pipeline's
         # `release()` handle so long-lived sessions (streaming foreachBatch,
@@ -69,7 +68,6 @@ class StageRunner:
             df = build().persist()
             self.persisted.append(df)
             n = df.count()
-            self.rows[stage] = n
             self.metrics.append(
                 {"stage": stage, "sec": round(time.time() - t0, 3), "rows": n}
             )
@@ -81,7 +79,6 @@ class StageRunner:
             with open(mpath) as f:
                 manifest = json.load(f)
             if manifest.get("input_fingerprint") == input_fingerprint:
-                self.rows[stage] = int(manifest.get("row_count", 0))
                 self.metrics.append({"stage": stage, "sec": 0.0, "resumed": True})
                 return self.spark.read.parquet(path)
 
@@ -99,7 +96,6 @@ class StageRunner:
         }
         with open(mpath, "w") as f:
             json.dump(manifest, f, indent=1)
-        self.rows[stage] = manifest["row_count"]
         self.metrics.append(
             {"stage": stage, "sec": round(time.time() - t0, 3), "rows": manifest["row_count"]}
         )

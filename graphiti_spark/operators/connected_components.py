@@ -30,46 +30,34 @@ MAX_ROUNDS = 25
 # most N+1 rows even when the distributed path is taken, so keep it small
 # enough that a discarded probe is cheap (~16 MB of uuid pairs) while still
 # covering every realistic dedup-pair batch in one driver pass.
+# The driver path pays at perfbench sizes (4 cores, seed 501, traced):
+# forcing the distributed path (this and node_dedup.DRIVER_FUZZY_MAX_KEYS
+# at 0) takes stage edges_canon_map, where CC is the only gate, from 19 to 50
+# jobs and 4.1 to 7.3 s over ingest_search's 2 calls, and from 19 to 57
+# jobs and 5.6 to 8.1 s over bulk_build's 3.
 DRIVER_CC_MAX_PAIRS = 200_000
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_rounds: int = MAX_ROUNDS,
-    driver_threshold: int | None = None,
-    known_count: int | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:
     """pairs(a string, b string) -> (id string, canonical string).
 
     Undirected; canonical = min member (ref UnionFind ordering rule).
     Only ids that occur in `pairs` appear in the output, matching
     `compress_uuid_map` (bulk_utils.py:541-550).
 
-    Scale-adaptive (analogous to Catalyst's broadcast-join selection): when
-    the pair list fits comfortably on the driver it runs the exact
-    reference union-find in-process (one job, no iterative shuffles); above
-    the threshold it switches to distributed min-label propagation with
-    pointer jumping. Both produce the identical min-member canonical map.
+    Scale-adaptive (analogous to Catalyst's broadcast-join selection): one
+    probe job fetches at most DRIVER_CC_MAX_PAIRS + 1 pairs; when they all
+    fit, the probe already holds the pair list and the exact reference
+    union-find runs in-process (no iterative shuffles). Above it, the
+    distributed min-label propagation with pointer jumping runs. Both
+    produce the identical min-member canonical map.
     """
-    # None -> module constant, resolved at CALL time so tests can force the
-    # distributed branch by monkeypatching DRIVER_CC_MAX_PAIRS to 0
-    if driver_threshold is None:
-        driver_threshold = DRIVER_CC_MAX_PAIRS
-    # callers that already materialized the pair list pass known_count:
-    # the probe job (and its discarded collect on the distributed path) is
-    # skipped entirely — important for scaling efficiency, since a collect
-    # is serial driver time no executor count can shrink
-    if known_count is not None:
-        if 0 < driver_threshold and known_count <= driver_threshold:
-            rows = pairs.collect()
-            return _driver_cc_df(pairs.sparkSession, [(r["a"], r["b"]) for r in rows])
-        return _distributed_cc(pairs, max_rounds)
-
-    # single probe job: fetch at most threshold+1 pairs — if they all fit,
-    # we already hold the data for the driver-side path (no count + collect)
-    sample = pairs.limit(driver_threshold + 1).collect() if driver_threshold > 0 else []
-    if 0 < driver_threshold and len(sample) <= driver_threshold:
-        return _driver_cc_df(pairs.sparkSession, [(r["a"], r["b"]) for r in sample])
+    # module constant read at CALL time, so tests can force the distributed
+    # branch by monkeypatching DRIVER_CC_MAX_PAIRS to 0
+    if DRIVER_CC_MAX_PAIRS > 0:
+        sample = pairs.limit(DRIVER_CC_MAX_PAIRS + 1).collect()
+        if len(sample) <= DRIVER_CC_MAX_PAIRS:
+            return _driver_cc_df(pairs.sparkSession, [(r["a"], r["b"]) for r in sample])
     return _distributed_cc(pairs, max_rounds)
 
 

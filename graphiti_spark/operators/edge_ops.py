@@ -1,9 +1,15 @@
-"""T1-T7 — edge pointer rewrite, dedup, and temporal invalidation.
+"""T1-T10 — edge pointer rewrite, dedup, near-dup merge and temporal
+invalidation.
 
 - D15 pointer rewrite: triples join the name-resolution map on
   (group_id, normalized mention name) for subject and object — the
-  hub-entity skew point; AQE skew-join splitting handles it, and the map
-  side is broadcast when small (ref utils/bulk_utils.py:556-563).
+  hub-entity skew point; AQE skew-join splitting handles it, and the
+  planner broadcasts the map side under the session's
+  autoBroadcastJoinThreshold (ref utils/bulk_utils.py:556-563).
+- T4/T5/T10 near-dup merge: the canonical map (id, canonical,
+  merged_episodes) folds in through one left join. Like the invalidation
+  map, it is a small materialized stage output in the pipeline, so the
+  planner sizes and broadcasts it with no hint.
 - T1/T2 exact-fact dedup: first occurrence wins on the key
   (source, target, normalized fact); the surviving edge absorbs all
   episode uuids in chronological order
@@ -27,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphiti_spark.functions.udfs import normalize_exact_col
+from graphiti_spark.operators.connected_components import connected_components
 from graphiti_spark.operators.node_dedup import det_id_col
 
 
@@ -240,26 +247,18 @@ def near_duplicate_edge_pairs(
 def near_dup_canonical_map(
     edges: DataFrame,
     cosine_threshold: float = EDGE_COSINE_THRESHOLD,
-) -> tuple[DataFrame, int]:
-    """T5/T10 judgment + union-find, WITHOUT the final rewrite: returns
-    (canonical map (id, canonical), pair count). Split out from
-    `merge_near_duplicate_edges` because the map depends only on columns
-    temporal invalidation never touches (uuid, endpoints, fact embeddings),
-    so the pipeline computes it from the deduped table CONCURRENTLY with
-    invalidation and applies it to the invalidated table afterwards.
-
-    One probe collect fetches up to DRIVER_CC_MAX_PAIRS + 1 judged pairs:
-    when they all fit, the probe is both the pair list for the exact driver
-    union-find and the pair count — the whole stage is one job. Otherwise
-    the pair DAG is persisted, counted, and handed to distributed min-label
-    CC.
+) -> DataFrame:
+    """T5/T10 judgment + union-find + provenance merge, WITHOUT the final
+    rewrite: returns the map (id, canonical, merged_episodes) over the
+    component members only (the min_uuid_map contract, self-mappings
+    included). `merged_episodes` — every member's episode provenance in
+    member (created_at, uuid) order — is set on the canonical's own row
+    only. Split out from `merge_near_duplicate_edges` because the map
+    depends only on columns temporal invalidation never touches (uuid,
+    endpoints, created_at, episodes, fact embeddings), so the pipeline
+    computes it from the deduped table CONCURRENTLY with invalidation and
+    applies it to the invalidated table afterwards.
     """
-    from graphiti_spark.operators.connected_components import (
-        DRIVER_CC_MAX_PAIRS,
-        _distributed_cc,
-        _driver_cc_df,
-    )
-
     pairs = (
         near_duplicate_edge_pairs(
             edges, cosine_threshold, ENDPOINT_PAIR_CAP, with_tokens=False
@@ -267,17 +266,18 @@ def near_dup_canonical_map(
         .filter(F.col("cos") >= cosine_threshold)
         .select(F.col("a_uuid").alias("a"), F.col("b_uuid").alias("b"))
     )
-    sample = pairs.limit(DRIVER_CC_MAX_PAIRS + 1).collect()
-    if len(sample) <= DRIVER_CC_MAX_PAIRS:
-        return (
-            _driver_cc_df(edges.sparkSession, [(r["a"], r["b"]) for r in sample]),
-            len(sample),
-        )
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    canon = _distributed_cc(pairs)
-    pairs.unpersist()
-    return canon, n_pairs
+    canon = connected_components(pairs)
+    members = F.collect_list(F.struct("created_at", "uuid", "episodes")).over(
+        Window.partitionBy("canonical")
+    )
+    merged = F.array_distinct(
+        F.flatten(F.transform(F.array_sort(members), lambda s: s.episodes))
+    )
+    return edges.join(canon, edges.uuid == canon.id).select(
+        "id",
+        "canonical",
+        F.when(F.col("id") == F.col("canonical"), merged).alias("merged_episodes"),
+    )
 
 
 def merge_near_duplicate_edges(
@@ -297,69 +297,22 @@ def merge_near_duplicate_edges(
     Embeds facts internally when no `fact_embedding` column is present.
     Schema is preserved; merged-away edges disappear.
     """
-    canon, n_pairs = near_dup_canonical_map(edges, cosine_threshold)
-    return apply_edge_merge(edges, canon, n_pairs)
+    return apply_edge_merge(edges, near_dup_canonical_map(edges, cosine_threshold))
 
 
-def apply_edge_merge(edges: DataFrame, canon: DataFrame, n_pairs: int) -> DataFrame:
-    """Rewrite step of T5/T10: apply a canonical map (from
-    `near_dup_canonical_map`) to the edge table — merged-away edges
-    disappear, each canonical edge absorbs its members' episode provenance
-    in member (created_at, uuid) order."""
-    out_cols = edges.columns
-    ep_merge = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("created_at", "uuid", "episodes"))),
-                lambda s: s.episodes,
-            )
-        )
-    ).alias("_merged_episodes")
-
-    # The canonical map covers ONLY component members (the min_uuid_map
-    # contract, self-mappings included) — at web scale a small fraction of
-    # the edge table. When it fits a broadcast, the big table is never
-    # shuffled AND is scanned exactly once: a narrow scan collects member
-    # episodes (small aggregate), then a single full-width pass left-joins
-    # the two broadcast maps, drops merged-away members, and swaps in the
-    # merged provenance. (An earlier 3-scan union formulation was
-    # row-identical but memory-bandwidth-bound — the full-width scan, not
-    # the joins, is the cost at scale.)
-    if n_pairs <= 2_000_000:
-        canon_b = F.broadcast(canon)
-        member_eps = edges.join(canon_b, edges.uuid == canon.id, how="inner").select(
-            "canonical", "created_at", "uuid", "episodes"
-        )
-        merged_eps = F.broadcast(
-            member_eps.groupBy(F.col("canonical").alias("comp")).agg(ep_merge)
-        )
-        return (
-            edges.join(
-                canon_b.withColumnRenamed("id", "uuid"), on="uuid", how="left"
-            )
-            .join(merged_eps, F.col("uuid") == F.col("comp"), how="left")
-            .filter(F.col("canonical").isNull() | (F.col("canonical") == F.col("uuid")))
-            .withColumn("episodes", F.coalesce("_merged_episodes", "episodes"))
-            .select(*out_cols)
-        )
-
-    # huge component maps: classic shuffle path
-    tagged = (
-        edges.join(canon, edges.uuid == canon.id, how="left")
-        .withColumn("comp", F.coalesce(F.col("canonical"), F.col("uuid")))
-        .drop("id", "canonical")
-    )
-    merged_eps = tagged.groupBy("comp").agg(ep_merge)
+def apply_edge_merge(edges: DataFrame, canon: DataFrame) -> DataFrame:
+    """Rewrite step of T5/T10: one left join of the edge table with a
+    `near_dup_canonical_map` — merged-away edges disappear, each canonical
+    edge takes its component's merged provenance. The map is a small
+    materialized stage output in the pipeline, so the planner broadcasts it
+    and the full-width edge table is scanned once and never shuffled."""
     return (
-        edges.join(merged_eps, edges.uuid == merged_eps.comp)
-        .withColumn("episodes", F.col("_merged_episodes"))
-        .select(*out_cols)
+        edges.join(canon.withColumnRenamed("id", "uuid"), on="uuid", how="left")
+        .filter(F.col("canonical").isNull() | (F.col("canonical") == F.col("uuid")))
+        .withColumn("episodes", F.coalesce("merged_episodes", "episodes"))
+        .select(*edges.columns)
     )
 
-
-# invalidation maps up to this many rows are broadcast when applied, so the
-# full-width edge table never crosses an exchange for the final assembly
-INV_MAP_BROADCAST_MAX = 4_000_000
 
 # contradiction domains with more edges than this are split into arrival-
 # rank blocks of this size, one pandas group each (the hub strategy)
@@ -483,20 +436,15 @@ def invalidation_map(edges: DataFrame) -> DataFrame:
     )
 
 
-def apply_invalidation(
-    edges: DataFrame,
-    inv_map: DataFrame,
-    now_ts,
-    broadcast_map: bool = False,
-) -> DataFrame:
+def apply_invalidation(edges: DataFrame, inv_map: DataFrame, now_ts) -> DataFrame:
     """Fold an `invalidation_map` back into the edge table: one left join
-    (broadcast when the caller knows the map is small — the full-width
-    edge table then never crosses an exchange) + the invalid_at/expired_at
-    column algebra. Stays LAZY: callers chain the near-dup merge and the
-    final write on top without materializing the intermediate."""
-    m = F.broadcast(inv_map) if broadcast_map else inv_map
+    (the pipeline's map is a small materialized stage output, which the
+    planner broadcasts, so the full-width edge table never crosses an
+    exchange) + the invalid_at/expired_at column algebra. Stays LAZY:
+    callers chain the near-dup merge and the final write on top without
+    materializing the intermediate."""
     out = (
-        edges.join(m, on="uuid", how="left")
+        edges.join(inv_map, on="uuid", how="left")
         .withColumn(
             "invalid_at",
             F.least(F.coalesce("invalid_at", "_self_min"), F.col("_later_min")),

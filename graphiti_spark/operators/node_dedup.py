@@ -16,7 +16,8 @@ distribute; the set-oriented equivalent is:
    LSH_BUCKET_CAP hot-bucket drop and the self-join on (group_id,
    band_pos, band_key), the LSH shuffle (D4-D6) — then native
    array_intersect/array_union Jaccard >= 0.9 (D7, D9).
-3. connected components with min-id canonical (D13/D14).
+3. connected components (D13/D14); each component keeps its earliest-seen
+   member as canonical, the reference's arrival order.
 
 Scale notes: the fuzzy stage's input is |distinct names per group|, orders
 of magnitude below |mentions|. Band-key hot buckets (e.g. thousands of
@@ -27,7 +28,7 @@ approximate; AQE skew-join splitting covers moderate skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphiti_spark.functions.udfs import (
@@ -48,19 +49,23 @@ def det_id_col(*cols):
 
 
 def name_keys(raw_mentions: DataFrame) -> DataFrame:
-    """Distinct (group_id, norm_exact) keys with their pre-canonical ids and
-    a deterministic display name (min surface form)."""
+    """Distinct (group_id, norm_exact) keys with their pre-canonical ids, a
+    deterministic display name (min surface form) and `first_seen`, the
+    key's earliest sighting (ep_valid_at, episode_uuid, mention_idx) — the
+    arrival order in which the reference creates nodes."""
     return (
         raw_mentions.select(
             "group_id",
             "name",
             "entity_type",
             normalize_exact_col(F.col("name")).alias("norm_exact"),
+            F.struct("ep_valid_at", "episode_uuid", "mention_idx").alias("seen"),
         )
         .groupBy("group_id", "norm_exact")
         .agg(
             F.min("name").alias("name"),
             F.sort_array(F.collect_set("entity_type")).alias("entity_types"),
+            F.min("seen").alias("first_seen"),
         )
         .withColumn("pre_id", det_id_col(F.lit("node"), F.col("group_id"), F.col("norm_exact")))
     )
@@ -71,7 +76,11 @@ def name_keys(raw_mentions: DataFrame) -> DataFrame:
 # already holds the data). Mirrors connected_components' scale-adaptive
 # driver/distributed switch. Sized so the driver path stays sub-second:
 # measured ~30s of serial Python at 100k keys (an Amdahl hole that cut
-# N-vs-4N scaling efficiency in half), vs ~0.2s at 20k.
+# N-vs-4N scaling efficiency in half), vs ~0.2s at 20k. The driver path
+# pays at perfbench sizes (4 cores, seed 501, traced): forcing the
+# distributed path (this and DRIVER_CC_MAX_PAIRS at 0) takes stage
+# name_resolution from 29 to 93 jobs and 6.4 to 14.0 s over ingest_search's
+# 2 calls, and from 22 to 86 jobs and 12.7 to 15.3 s over bulk_build's 3.
 DRIVER_FUZZY_MAX_KEYS = 20_000
 
 
@@ -109,42 +118,26 @@ def _driver_fuzzy_pairs(rows) -> list[tuple[str, str]]:
     return sorted(out)
 
 
-def fuzzy_duplicate_pairs(
-    keys: DataFrame,
-    driver_threshold: int | None = None,
-    known_count: int | None = None,
-    cache_registry: list | None = None,
-) -> DataFrame:
+def fuzzy_duplicate_pairs(keys: DataFrame, cache_registry: list) -> DataFrame:
     """LSH band join + Jaccard >= 0.9 over high-entropy distinct names.
     Returns pairs(a, b) of pre_ids (a < b), within the same group only.
 
-    Scale-adaptive: below `driver_threshold` distinct keys the pairs come
-    from the in-process kernel twin (zero further jobs); above it the
-    distributed LSH band join below runs. Callers that already counted the
-    (persisted) keys pass `known_count` so the distributed path never pays
-    a probe collect. `cache_registry`: as in resolve_names — the
-    distributed path's persisted feature frame is appended to it."""
-    # None -> module constant, resolved at CALL time so tests can force the
-    # distributed branch by monkeypatching DRIVER_FUZZY_MAX_KEYS to 0
-    if driver_threshold is None:
-        driver_threshold = DRIVER_FUZZY_MAX_KEYS
-    if driver_threshold > 0:
-        if known_count is not None:
-            if known_count > driver_threshold:
-                sample = None
-            else:
-                sample = keys.select("group_id", "pre_id", "name").collect()
-        else:
-            sample = (
-                keys.select("group_id", "pre_id", "name")
-                .limit(driver_threshold + 1)
-                .collect()
-            )
-            if len(sample) > driver_threshold:
-                sample = None
-        if sample is not None:
-            spark = keys.sparkSession
-            return spark.createDataFrame(
+    Scale-adaptive: one probe job fetches at most DRIVER_FUZZY_MAX_KEYS + 1
+    keys; when they all fit, the pairs come from the in-process kernel twin
+    (zero further jobs); above it the distributed LSH band join below runs.
+    `cache_registry`: the caller's list of frames to unpersist once the
+    output is materialized — the distributed path's persisted feature frame
+    is appended to it."""
+    # module constant read at CALL time, so tests can force the distributed
+    # branch by monkeypatching DRIVER_FUZZY_MAX_KEYS to 0
+    if DRIVER_FUZZY_MAX_KEYS > 0:
+        sample = (
+            keys.select("group_id", "pre_id", "name")
+            .limit(DRIVER_FUZZY_MAX_KEYS + 1)
+            .collect()
+        )
+        if len(sample) <= DRIVER_FUZZY_MAX_KEYS:
+            return keys.sparkSession.createDataFrame(
                 _driver_fuzzy_pairs(sample), schema="a string, b string"
             )
 
@@ -159,8 +152,7 @@ def fuzzy_duplicate_pairs(
             F.col("f.band_keys").alias("band_keys"),
         )
     ).persist()  # read by the bucket sizes AND both pair-join sides
-    if cache_registry is not None:
-        cache_registry.append(feat)
+    cache_registry.append(feat)
     feat.count()  # eager: all three consumers appear in downstream actions
     pairs = banded_pairs(
         feat, "pre_id", "band_keys", "shingles", LSH_BUCKET_CAP, block_cols=("group_id",)
@@ -173,19 +165,40 @@ def fuzzy_duplicate_pairs(
     ).select("a", "b")
 
 
+def _earliest_canonical(pool: DataFrame, canon: DataFrame) -> DataFrame:
+    """The pool's rows plus `canonical_id`, given the connected components
+    (id, canonical) of their fuzzy pairs. A key in no component is its own
+    canonical. A component's members all take the member the reference's
+    arrival order picks: an existing node first (its pool row has no
+    `first_seen`), then the earliest-seen key, then the min id. The
+    reference creates a node at a name's first sighting and resolves every
+    later variant into it (dedup_helpers.py:198-246).
+
+    Only the members cross an exchange: they and the unpaired keys each
+    join the small component map, so the pool is never shuffled."""
+    rank = F.struct(F.col("first_seen").isNotNull(), "first_seen", "pre_id")
+    first = F.min(rank).over(Window.partitionBy("canonical"))["pre_id"]
+    in_comp = pool.pre_id == canon.id
+    members = pool.join(canon, in_comp).select(*pool.columns, first.alias("canonical_id"))
+    singles = pool.join(canon, in_comp, "left_anti").withColumn("canonical_id", F.col("pre_id"))
+    return members.unionByName(singles)
+
+
 def resolve_names(
     raw_mentions: DataFrame,
     existing_nodes: DataFrame | None = None,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Global canonicalization map: one row per distinct (group_id, name key).
 
-    `cache_registry`: optional list the internal key and feature caches are
-    appended to, so a long-lived caller (streaming foreachBatch) can
-    unpersist them after the resolution output is materialized.
+    `cache_registry`: list the internal key and feature caches are appended
+    to; the caller unpersists them after the resolution output is
+    materialized (run_pipeline's `release`).
 
     Returns name_resolution(group_id, norm_exact, name, entity_types,
-    canonical_id) — the D15 pointer-rewrite map.
+    canonical_id) — the D15 pointer-rewrite map. A fuzzy component's
+    canonical is its earliest-seen member (`_earliest_canonical`).
 
     With `existing_nodes` (the current canonical nodes snapshot: uuid,
     group_id, name, aliases) this is the reference's D11 — new mentions
@@ -197,7 +210,14 @@ def resolve_names(
     """
     keys = name_keys(raw_mentions)
 
-    if existing_nodes is not None:
+    if existing_nodes is None:
+        # keys feed the fuzzy probe and both canonical-pick joins: the cache
+        # dedupes the distinct-names aggregation (the expensive scan over
+        # all mentions)
+        keys = keys.persist()
+        cache_registry.append(keys)
+        pool = keys
+    else:
         ex_keys = (
             existing_nodes.select(
                 "group_id",
@@ -216,7 +236,8 @@ def resolve_names(
         )
         keys = keys.join(ex_exact, on=["group_id", "norm_exact"], how="left")
         # names not exactly known enter the fuzzy pool together with the
-        # existing nodes' primary keys so LSH can link new->existing
+        # existing nodes' primary keys so LSH can link new->existing; an
+        # existing node has no first_seen, which ranks it first as canonical
         ex_pool = (
             ex_keys.groupBy("group_id", "ex_uuid")
             .agg(F.min("name").alias("name"), F.min("norm_exact").alias("norm_exact"))
@@ -226,66 +247,21 @@ def resolve_names(
                 "name",
                 F.array().cast("array<string>").alias("entity_types"),
                 F.col("ex_uuid").alias("pre_id"),
+                F.lit(None).cast(keys.schema["first_seen"].dataType).alias("first_seen"),
             )
         )
-        new_pool = keys.filter(F.col("ex_uuid").isNull()).select(
-            "group_id", "norm_exact", "name", "entity_types", "pre_id"
-        )
-        pairs = fuzzy_duplicate_pairs(
-            new_pool.unionByName(ex_pool), cache_registry=cache_registry
-        )
-        # existing uuids must win as canonical: prefix-priority remap — an
-        # existing id sorts before any content-hash pre_id via a marker
-        ex_ids = existing_nodes.select(F.col("uuid").alias("id")).distinct()
-        canon = connected_components(pairs)
-        # choose per component: min existing member if any, else min member
-        member_flag = canon.join(
-            ex_ids.withColumn("is_ex", F.lit(1)), on="id", how="left"
-        )
-        comp_best = (
-            member_flag.groupBy("canonical")
-            .agg(
-                F.min(F.when(F.col("is_ex") == 1, F.col("id"))).alias("best_ex"),
-                F.min("id").alias("best_any"),
-            )
-            .select(
-                "canonical",
-                F.coalesce(F.col("best_ex"), F.col("best_any")).alias("final_canon"),
-            )
-        )
-        canon = canon.join(comp_best, on="canonical").select(
-            "id", F.col("final_canon").alias("canonical")
-        )
-        resolved = keys.join(canon, keys.pre_id == canon.id, how="left").select(
-            "group_id",
-            "norm_exact",
-            "name",
-            "entity_types",
-            F.coalesce(F.col("ex_uuid"), F.col("canonical"), F.col("pre_id")).alias(
-                "canonical_id"
-            ),
-        )
-        return resolved
+        pool = keys.filter(F.col("ex_uuid").isNull()).select(*ex_pool.columns).unionByName(ex_pool)
 
-    # keys feed the fuzzy pairing AND the final resolution join: persist +
-    # one count dedupes the distinct-names aggregation (the expensive scan
-    # over all mentions) and picks the fuzzy path without a probe collect
-    keys = keys.persist()
-    if cache_registry is not None:
-        cache_registry.append(keys)
-    n_keys = keys.count()
-    pairs = fuzzy_duplicate_pairs(
-        keys, known_count=n_keys, cache_registry=cache_registry
-    )
-    canon = connected_components(pairs)  # (id, canonical) for paired ids only
-
-    return keys.join(canon, keys.pre_id == canon.id, how="left").select(
-        "group_id",
-        "norm_exact",
-        "name",
-        "entity_types",
-        F.coalesce(F.col("canonical"), F.col("pre_id")).alias("canonical_id"),
-    )
+    pairs = fuzzy_duplicate_pairs(pool, cache_registry)
+    resolved = _earliest_canonical(pool, connected_components(pairs))
+    if existing_nodes is not None:
+        # the existing nodes' own pool rows leave; exact alias hits keep the
+        # existing uuid
+        hits = keys.filter(F.col("ex_uuid").isNotNull()).select(
+            *ex_pool.columns, F.col("ex_uuid").alias("canonical_id")
+        )
+        resolved = resolved.filter(F.col("first_seen").isNotNull()).unionByName(hits)
+    return resolved.select("group_id", "norm_exact", "name", "entity_types", "canonical_id")
 
 
 def duplicate_pair_edges(resolution: DataFrame, now=None) -> DataFrame:

@@ -36,7 +36,6 @@ from graphiti_spark.functions.udfs import (
 )
 from graphiti_spark.lineage import StageRunner
 from graphiti_spark.operators.edge_ops import (
-    INV_MAP_BROADCAST_MAX,
     apply_edge_merge,
     apply_invalidation,
     dedup_edges,
@@ -260,33 +259,25 @@ def _resolve_and_assemble(
     #
     # Both stages materialize only a SMALL map: the per-uuid invalidation
     # map (one grouped pass over the contradiction domains, no pair set
-    # and no intermediate cache) and the near-dup canonical map. They
-    # derive from the deduped table and touch disjoint columns
-    # (invalidation never changes uuid, endpoints or fact embeddings), so
+    # and no intermediate cache) and the near-dup canonical map with each
+    # component's merged provenance on its canonical row. They derive from
+    # the deduped table and touch disjoint columns (invalidation never
+    # changes uuid, endpoints, created_at, episodes or fact embeddings), so
     # they run concurrently. The full-width edge table is never cached
-    # again after edges_dedup: invalidation folds in through a broadcast
-    # join and the merge chains on top, materialized once by the `edges`
-    # stage. The result is identical to
+    # again after edges_dedup: the `edges` stage folds both maps in with
+    # one left join each; the maps are materialized, so the planner knows
+    # their size and broadcasts them, and the edge table crosses no
+    # exchange (tests/test_plans.py). The result is identical to
     # merge_near_duplicate_edges(invalidate_contradictions(.)).
     inv_map, canon = runner.run_concurrently(
         in_fp,
         edges_invalidate=lambda: invalidation_map(deduped),
-        edges_canon_map=lambda: near_dup_canonical_map(deduped)[0],
+        edges_canon_map=lambda: near_dup_canonical_map(deduped),
     )
-
-    # the gates use the materialized map sizes: the broadcast decisions are
-    # exactly about how big each map is
     edges = runner.run(
         "edges",
         in_fp,
-        lambda: apply_edge_merge(
-            apply_invalidation(
-                deduped, inv_map, now,
-                broadcast_map=runner.rows["edges_invalidate"] <= INV_MAP_BROADCAST_MAX,
-            ),
-            canon,
-            runner.rows["edges_canon_map"],
-        ),
+        lambda: apply_edge_merge(apply_invalidation(deduped, inv_map, now), canon),
     )
 
     if with_embeddings:

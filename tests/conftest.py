@@ -12,3 +12,13 @@ def spark():
     s = get_spark(app_name="graphiti_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def cache_registry():
+    """The cache_registry list for a standalone operator call; the caches it
+    collects are unpersisted when the test ends."""
+    cached: list = []
+    yield cached
+    for df in cached:
+        df.unpersist()

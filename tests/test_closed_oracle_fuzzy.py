@@ -41,7 +41,7 @@ def test_variant_spellings_share_fuzzy_form():
     assert K.jaccard(K.shingles(fa), K.shingles(fb)) == 1.0
 
 
-def test_fuzzy_leg_fires_on_exactly_the_planted_classes(spark):
+def test_fuzzy_leg_fires_on_exactly_the_planted_classes(spark, cache_registry):
     """At DRIVER scale the LSH + Jaccard >= 0.9 pairing finds a NONZERO
     pair set that matches exactly the same-(group, normalize_fuzzy)
     equivalence classes — nothing missed (candidacy is structural) and
@@ -57,7 +57,7 @@ def test_fuzzy_leg_fires_on_exactly_the_planted_classes(spark):
     pages = closed_form_pages_fuzzy(spark.read.parquet(f"{SF_BIG}/orders.parquet"))
     eps = pages_to_episodes(pages)
     keys = name_keys(extract_mentions_df(eps)).persist()
-    got = {(r.a, r.b) for r in fuzzy_duplicate_pairs(keys).collect()}
+    got = {(r.a, r.b) for r in fuzzy_duplicate_pairs(keys, cache_registry).collect()}
     assert got, "fuzzy leg must fire on a nonzero pair set"
 
     by_class: dict = {}
@@ -90,8 +90,7 @@ def test_neardup_merge_has_zero_candidates(fuzzy_result):
         .collect()[0][0]
     )
     assert max_per_block == 1
-    canon, n_pairs = near_dup_canonical_map(edges)
-    assert n_pairs == 0 and canon.count() == 0
+    assert near_dup_canonical_map(edges).count() == 0
 
 
 def test_merged_nodes_carry_both_spellings(fuzzy_result):

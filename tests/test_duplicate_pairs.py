@@ -25,7 +25,7 @@ def _mentions(spark, rows):
     )
 
 
-def test_duplicate_pairs_basic(spark):
+def test_duplicate_pairs_basic(spark, cache_registry):
     """Exact case-variants AND fuzzy punctuation-variants both surface as
     pairs; singletons never do; canonical_name is the component min."""
     m = _mentions(
@@ -38,7 +38,7 @@ def test_duplicate_pairs_basic(spark):
             ("g2", "Acme Labs"),      # other group: no counterpart -> none
         ],
     )
-    res = resolve_names(m)
+    res = resolve_names(m, cache_registry=cache_registry)
     pairs = duplicate_pair_edges(res, now=NOW).collect()
     assert len(pairs) == 1
     p = pairs[0]
@@ -48,8 +48,9 @@ def test_duplicate_pairs_basic(spark):
     assert p.canonical_name == "acme labs"  # min over the component
     assert p.source_node_uuid != p.target_node_uuid
     assert p.created_at.replace(tzinfo=timezone.utc) == NOW
-    # the canonical uuid is the component's min pre_id, and the duplicate
-    # row points exactly there
+    # the component has one canonical uuid (its earliest-seen member's
+    # pre_id; every sighting here ties, so the min pre_id), and the
+    # duplicate row points exactly there
     ids = {
         r.norm_exact: r.canonical_id
         for r in res.withColumn(
@@ -61,17 +62,20 @@ def test_duplicate_pairs_basic(spark):
     assert p.target_node_uuid == next(iter(ids.values()))
 
 
-def test_duplicate_pairs_incremental_points_at_existing(spark):
+def test_duplicate_pairs_incremental_points_at_existing(spark, cache_registry):
     """D11 filter-existing semantics: with existing_nodes, the new batch's
     variant resolves to the ESTABLISHED uuid — the pair targets it, and no
     existing->existing pair is ever emitted."""
-    first = resolve_names(_mentions(spark, [("g1", "Acme Labs")]))
+    first = resolve_names(
+        _mentions(spark, [("g1", "Acme Labs")]), cache_registry=cache_registry
+    )
     from graphiti_spark.operators.node_dedup import build_canonical_nodes
 
     nodes = build_canonical_nodes(first, _mentions(spark, [("g1", "Acme Labs")]))
     ex_uuid = nodes.collect()[0].uuid
     second = resolve_names(
-        _mentions(spark, [("g1", "Acme-Labs")]), existing_nodes=nodes
+        _mentions(spark, [("g1", "Acme-Labs")]), existing_nodes=nodes,
+        cache_registry=cache_registry,
     )
     pairs = duplicate_pair_edges(second, now=NOW).collect()
     assert len(pairs) == 1

@@ -6,9 +6,11 @@ distributed branches are covered piecemeal by test_connected_components /
 test_skew; THIS test runs the whole pipeline end-to-end with every
 driver-path threshold forced to 0 and the invalidation hub block forced to
 2 rows — distributed LSH band join (D4-D9), distributed min-label CC with
-pointer jumping (D13/D14), arrival-rank hub blocks in every multi-edge
-contradiction domain (T6) and the persisted near-dup pair DAG (T4/T5) —
-and asserts the output triple set is IDENTICAL to the default path's.
+pointer jumping (D13/D14) for the name components and the near-dup edge
+components (T4/T5), and arrival-rank hub blocks in every multi-edge
+contradiction domain (T6) — and asserts the output triple set is
+IDENTICAL to the default path's. `_force_distributed` is the one forcing
+helper; the operator tests import it too.
 The near-miss fuzzy band (shingle Jaccard just above and just below 0.9)
 is checked on both paths against a Python replay of the kernels."""
 
@@ -89,8 +91,8 @@ def test_forced_distributed_matches_default_fuzzy_closed(spark, monkeypatch):
 
 def test_forced_distributed_matches_default_generated(spark, monkeypatch):
     """Generated web corpus WITH embeddings: exercises the hub-block
-    invalidation split and the persisted near-dup pair DAG (nonzero
-    cosine merge pairs), against the driver path."""
+    invalidation split and distributed CC over the near-dup edge pairs
+    (nonzero cosine merge pairs), against the driver path."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rows = generate_web_pages(n_pages=400, seed=42)
     pages = spark.createDataFrame(
@@ -170,8 +172,7 @@ def test_near_miss_fuzzy_band_matches_kernel_replay(spark, monkeypatch, forced):
         schema=WEB_PAGES,
     )
     if forced:
-        monkeypatch.setattr(node_dedup, "DRIVER_FUZZY_MAX_KEYS", 0)
-        monkeypatch.setattr(cc_mod, "DRIVER_CC_MAX_PAIRS", 0)
+        _force_distributed(monkeypatch)
     result = run_pipeline(spark, pages, now=E._FIXED_NOW, with_embeddings=False)
     keys = [(r["group_id"], r["norm_exact"]) for r in result["name_resolution"].collect()]
     got = _merged_classes(result)

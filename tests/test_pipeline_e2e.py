@@ -214,3 +214,38 @@ def test_temporal_columns_match_oracle(spark, result):
         f"{len(diverging)}/{len(shared)} temporal tuples diverge; "
         f"sample: {sorted(diverging)[:3]}"
     )
+
+
+def test_earliest_seen_spelling_names_the_node(spark):
+    """Two spellings that fuzzy-merge: the oracle creates the node at the
+    first sighting ('Duff Holdings'), whose id sorts above the later
+    'Duff-Holdings'. run_pipeline keeps the same node uuid, so the edge
+    uuids, and with them the near-dup merge's min-uuid survivor, equal
+    the oracle's."""
+    from datetime import timedelta
+
+    from graphiti_spark.extraction import det_id
+
+    host = "news.example"
+    assert det_id("node", host, "duff-holdings") < det_id("node", host, "duff holdings")
+    texts = [
+        "Duff Holdings is based in Lisbon. Homer Simpson works at Duff Holdings.",
+        "Duff-Holdings is based in Lisbon. Homer Simpson works at Duff-Holdings.",
+    ]
+    pages = spark.createDataFrame(
+        [(f"https://{host}/{i}", NOW - timedelta(days=2 - i), None, t, "en")
+         for i, t in enumerate(texts)],
+        schema=WEB_PAGES,
+    )
+    result = run_pipeline(spark, pages, now=NOW, with_embeddings=True)
+    eps = [
+        {"uuid": r["episode_uuid"], "group_id": r["group_id"],
+         "content": r["content"], "valid_at": r["ep_valid_at"]}
+        for r in result["episodes"].collect()
+    ]
+    g = ingest_episodes(eps, NOW)
+    assert det_id("node", host, "duff holdings") in g.nodes
+    assert {r["uuid"] for r in result["nodes"].collect()} == set(g.nodes)
+    assert {r["uuid"] for r in result["edges"].collect()} == {e.uuid for e in g.edges.values()}
+    assert spark_triple_set(result) == triple_set(g)
+    result["release"]()

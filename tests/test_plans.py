@@ -6,6 +6,8 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
+from test_forced_distributed import _force_distributed
+
 from graphiti_spark.datagen import generate_web_pages
 from graphiti_spark.pipeline import pages_to_episodes, run_pipeline
 from graphiti_spark.schemas import WEB_PAGES
@@ -46,21 +48,21 @@ def test_column_pruning_drops_html_when_text_only(spark, pages_path):
     assert "html" not in read_schema, f"html must be pruned: {read_schema}"
 
 
-def _fuzzy_band_pairs(pages):
+def _fuzzy_band_pairs(pages, cache_registry):
     from graphiti_spark.functions.udfs import extract_mentions_df
     from graphiti_spark.operators.node_dedup import fuzzy_duplicate_pairs, name_keys
 
     keys = name_keys(extract_mentions_df(pages_to_episodes(pages)))
-    return fuzzy_duplicate_pairs(keys, driver_threshold=0)  # force distributed
+    return fuzzy_duplicate_pairs(keys, cache_registry)
 
 
-def _minhash_band_pairs(pages):
+def _minhash_band_pairs(pages, cache_registry):
     from graphiti_spark.dataops import minhash_neardup_pairs
 
     return minhash_neardup_pairs(pages.select(F.col("url").alias("doc_id"), "text"))
 
 
-def _simhash_band_pairs(pages):
+def _simhash_band_pairs(pages, cache_registry):
     from graphiti_spark.dataops import simhash_neardup_pairs
 
     return simhash_neardup_pairs(pages.select(F.col("url").alias("doc_id"), "text"))
@@ -71,12 +73,15 @@ def _simhash_band_pairs(pages):
     [_fuzzy_band_pairs, _minhash_band_pairs, _simhash_band_pairs],
     ids=["fuzzy", "minhash", "simhash"],
 )
-def test_distributed_fuzzy_band_join_no_cartesian(spark, pages_path, band_pairs):
+def test_distributed_fuzzy_band_join_no_cartesian(
+    spark, pages_path, band_pairs, monkeypatch, cache_registry
+):
     """Every banded caller (the distributed fuzzy name leg, minhash and
     simhash doc dedup — what runs at 100x) must pair rows through the
     (block, band_pos, band_key) equi-join of operators.pairs.banded_pairs —
     a plan regression to a cartesian/nested-loop would be quadratic."""
-    plan = _plan(band_pairs(spark.read.parquet(pages_path)))
+    _force_distributed(monkeypatch)
+    plan = _plan(band_pairs(spark.read.parquet(pages_path), cache_registry))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
@@ -103,6 +108,27 @@ def test_pointer_rewrite_uses_broadcast(spark, pages_path):
     plan = _plan(rr)
     assert "BroadcastHashJoin" in plan, "D15 map join must broadcast"
     assert "CartesianProduct" not in plan
+
+
+def test_edges_stage_broadcasts_both_maps(spark, pages_path):
+    """The `edges` stage folds the invalidation map and the near-dup
+    canonical map into the deduped edge table with no hint and no size
+    gate: both maps are materialized stage outputs, so the planner knows
+    their size and broadcasts them. Above the edges_dedup scan there are
+    exactly two joins, both BroadcastHashJoin building the map side, and no
+    Exchange: the full-width edge table is never shuffled."""
+    pages = spark.read.parquet(pages_path)
+    res = run_pipeline(spark, pages, now=NOW, with_embeddings=False)
+    rows = {m["stage"]: m["rows"] for m in res["metrics"]}
+    # an empty map would let AQE drop its join, so both must be non-empty
+    assert rows["edges_invalidate"] > 0 and rows["edges_canon_map"] > 0, rows
+    final = _plan(res["edges"]).split("== Final Plan ==", 1)[1]
+    spine = final.split("InMemoryTableScan", 1)[0]  # down to the edges_dedup scan
+    joins = [line for line in spine.splitlines() if "Join" in line]
+    assert len(joins) == 2, spine
+    assert all("BroadcastHashJoin" in j and "LeftOuter, BuildRight" in j for j in joins), spine
+    assert "Exchange" not in spine, spine
+    res["release"]()
 
 
 def test_no_cartesian_in_pipeline_outputs(spark, pages_path):

@@ -183,9 +183,10 @@ def test_zero_norm_embeddings_never_match(spark):
 
 
 def test_canonical_map_probe_path(spark):
-    """near_dup_canonical_map's probe collect feeds the driver union-find:
-    near-duplicate facts merge only within their own endpoint pair, the
-    min uuid is canonical, and the pair count is the judged pairs."""
+    """near_dup_canonical_map on the driver union-find path: near-duplicate
+    facts merge only within their own endpoint pair, the min uuid is
+    canonical, and only the canonical's row carries the members' episodes,
+    in member (created_at, uuid) order."""
     from datetime import datetime, timezone
 
     from graphiti_spark.extraction import embed_text
@@ -211,10 +212,11 @@ def test_canonical_map_probe_path(spark):
         "episodes array<string>, created_at timestamp, valid_at timestamp, "
         "invalid_at timestamp, fact_embedding array<float>",
     )
-    canon, n_pairs = near_dup_canonical_map(edges)
-    assert n_pairs == 2
-    got = sorted(tuple(r) for r in canon.collect())
-    assert got == [("e1", "e1"), ("e2", "e1"), ("e4", "e4"), ("e5", "e4")]
+    got = sorted(tuple(r) for r in near_dup_canonical_map(edges).collect())
+    assert got == [
+        ("e1", "e1", ["ep2", "ep1"]), ("e2", "e1", None),
+        ("e4", "e4", ["ep4", "ep5"]), ("e5", "e4", None),
+    ]
 
 
 def test_invalidation_mins_chunk_size_invariant():
