@@ -1,9 +1,10 @@
 """Vectorized Arrow/pandas UDFs — the ONLY Python that runs on executors.
 
 Per the BASELINE input_hint there is no per-row Python UDF anywhere in this
-engine: extraction fan-out uses mapInPandas (one Arrow batch in, one
-exploded Arrow batch out — no array<struct> intermediary, no shuffle), and
-per-name dedup features use a scalar pandas UDF returning a struct.
+engine: html->text and the extraction fan-out share one mapInPandas (one
+Arrow batch of pages in, one exploded Arrow batch out — no array<struct>
+intermediary, no shuffle, one crossing per page), and per-name dedup
+features use a scalar pandas UDF returning a struct.
 
 All semantic logic lives in graphiti_spark.kernels / .extraction (pure
 Python, shared with the oracle); these wrappers only batch it.
@@ -15,7 +16,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, StringType
+from pyspark.sql.types import ArrayType, FloatType
 
 from graphiti_spark import kernels as K
 from graphiti_spark import schemas
@@ -28,95 +29,45 @@ from graphiti_spark.extraction import (
 )
 
 # ---------------------------------------------------------------------------
-# html -> text (scalar pandas UDF; byte-identical per url)
+# S3/E1/E3 — html->text plus extraction fan-out in ONE mapInPandas
+# expected input columns: episode_uuid, group_id, ep_valid_at, html, text
 # ---------------------------------------------------------------------------
 
+# Each page crosses into Python once: the map derives its text
+# (html_to_text(html), or the text column when html is null) and emits it
+# as the page's kind='e' row, then the page's mentions ('m') and triples
+# ('t') from that same string. The episode row takes its content from the
+# materialized 'e' rows, so no Python runs when episodes are written.
 
-@F.pandas_udf(StringType())
-def html_to_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: html_to_text(b) if b is not None else None)
-
-
-# ---------------------------------------------------------------------------
-# E1/E3 — extraction fan-out via mapInPandas
-# expected input columns: episode_uuid, group_id, ep_valid_at, content
-# ---------------------------------------------------------------------------
-
-
-def mentions_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("episode_uuid", "group_id", "ep_valid_at", "name", "entity_type", "mention_idx")}
-        for ep_uuid, group, ts, content in zip(
-            pdf["episode_uuid"], pdf["group_id"], pdf["ep_valid_at"], pdf["content"]
-        ):
-            for idx, m in enumerate(extract_mentions(content or "")):
-                out["episode_uuid"].append(ep_uuid)
-                out["group_id"].append(group)
-                out["ep_valid_at"].append(ts)
-                out["name"].append(m["name"])
-                out["entity_type"].append(m["entity_type"])
-                out["mention_idx"].append(idx)
-        pdf_out = pd.DataFrame(out)
-        pdf_out["ep_valid_at"] = pd.to_datetime(pdf_out["ep_valid_at"], utc=True)
-        yield pdf_out
-
-
-def extract_mentions_df(episodes_df):
-    """episodes(episode_uuid, group_id, ep_valid_at, content) -> RAW_MENTIONS."""
-    cols = ["episode_uuid", "group_id", "ep_valid_at", "content"]
-    return episodes_df.select(*cols).mapInPandas(mentions_map, schema=schemas.RAW_MENTIONS)
-
-
-# fused single-pass extraction: mentions AND triples from one scan of the
-# episode content (kind = 'm' | 't'), so the corpus is read and shipped to
-# Python exactly once
+_KEYS = ("kind", "episode_uuid", "group_id", "ep_valid_at")
+_PAYLOAD = tuple(f.name for f in schemas.RAW_EXTRACTION.fields if f.name not in _KEYS)
+_TRIPLE = ("subject", "predicate", "object", "fact", "valid_at", "invalid_at")
 
 
 def extract_all_map(
     batches: Iterator[pd.DataFrame], mention_fn=extract_mentions
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        cols = {
-            k: []
-            for k in (
-                "kind", "episode_uuid", "group_id", "ep_valid_at",
-                "name", "entity_type", "mention_idx",
-                "subject", "predicate", "object", "fact", "valid_at", "invalid_at",
-                "triple_idx",
-            )
-        }
+        cols = {k: [] for k in _KEYS + _PAYLOAD}
 
-        def base(kind, ep_uuid, group, ts):
-            cols["kind"].append(kind)
-            cols["episode_uuid"].append(ep_uuid)
-            cols["group_id"].append(group)
-            cols["ep_valid_at"].append(ts)
+        def row(*keys, **vals):
+            for k, v in zip(_KEYS, keys):
+                cols[k].append(v)
+            for k in _PAYLOAD:
+                cols[k].append(vals.get(k))
 
-        for ep_uuid, group, ts, content in zip(
-            pdf["episode_uuid"], pdf["group_id"], pdf["ep_valid_at"], pdf["content"]
+        for ep_uuid, group, ts, html, page_text in zip(
+            pdf["episode_uuid"], pdf["group_id"], pdf["ep_valid_at"], pdf["html"], pdf["text"]
         ):
+            content = html_to_text(html) if html is not None else page_text
+            row("e", ep_uuid, group, ts, content=content)
             text = content or ""
             for idx, m in enumerate(mention_fn(text)):
-                base("m", ep_uuid, group, ts)
-                cols["name"].append(m["name"])
-                cols["entity_type"].append(m["entity_type"])
-                cols["mention_idx"].append(idx)
-                for k in ("subject", "predicate", "object", "fact", "valid_at", "invalid_at"):
-                    cols[k].append(None)
-                cols["triple_idx"].append(None)
+                row("m", ep_uuid, group, ts, name=m["name"],
+                    entity_type=m["entity_type"], mention_idx=idx)
             ref_time = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
             for t_idx, t in enumerate(extract_triples(text, ref_time)):
-                base("t", ep_uuid, group, ts)
-                cols["name"].append(None)
-                cols["entity_type"].append(None)
-                cols["mention_idx"].append(None)
-                cols["subject"].append(t["subject"])
-                cols["predicate"].append(t["predicate"])
-                cols["object"].append(t["object"])
-                cols["fact"].append(t["fact"])
-                cols["valid_at"].append(t["valid_at"])
-                cols["invalid_at"].append(t["invalid_at"])
-                cols["triple_idx"].append(t_idx)
+                row("t", ep_uuid, group, ts, triple_idx=t_idx, **{k: t[k] for k in _TRIPLE})
         out = pd.DataFrame(cols)
         # arrow needs consistent dtypes even for EMPTY frames (a batch with
         # zero extractions materializes float64 columns otherwise)
@@ -128,9 +79,11 @@ def extract_all_map(
 
 
 def extract_all_df(episodes_df, reflexion: bool = False):
-    """Fused one-scan extraction; `reflexion=True` adds the E2 second-pass
-    mention family (extraction.extract_mentions_with_reflexion) — opt-in,
-    mirroring the reference's MAX_REFLEXION_ITERATIONS=0 default-off."""
+    """Fused one-scan extraction over pages_to_episodes' output;
+    `reflexion=True` adds the E2 second-pass mention family
+    (extraction.extract_mentions_with_reflexion) — opt-in, mirroring the
+    reference's MAX_REFLEXION_ITERATIONS=0 default-off. The text column
+    crosses only for rows without html, the rows whose content it is."""
     from functools import partial
 
     from graphiti_spark.extraction import extract_mentions_with_reflexion
@@ -140,14 +93,16 @@ def extract_all_df(episodes_df, reflexion: bool = False):
         if reflexion
         else extract_all_map
     )
-    cols = ["episode_uuid", "group_id", "ep_valid_at", "content"]
-    return episodes_df.select(*cols).mapInPandas(fn, schema=schemas.RAW_EXTRACTION)
+    return episodes_df.select(
+        "episode_uuid", "group_id", "ep_valid_at", "html",
+        F.when(F.col("html").isNull(), F.col("text")).alias("text"),
+    ).mapInPandas(fn, schema=schemas.RAW_EXTRACTION)
 
 
 def split_extraction(raw_all):
-    """(raw_mentions, raw_triples) views over the fused extraction table."""
-    from pyspark.sql import functions as F
-
+    """(raw_mentions, raw_triples, contents) views over the fused
+    extraction table; contents is (episode_uuid, content), one row per
+    extracted page."""
     m = raw_all.filter(F.col("kind") == "m").select(
         "episode_uuid", "group_id", "ep_valid_at", "name", "entity_type", "mention_idx"
     )
@@ -155,7 +110,8 @@ def split_extraction(raw_all):
         "episode_uuid", "group_id", "ep_valid_at", "subject", "predicate", "object",
         "fact", "valid_at", "invalid_at", "triple_idx",
     )
-    return m, t
+    e = raw_all.filter(F.col("kind") == "e").select("episode_uuid", "content")
+    return m, t, e
 
 
 # ---------------------------------------------------------------------------

@@ -123,55 +123,45 @@ ENDPOINT_PAIR_CAP = 10_000  # hub guard: same shape as node_dedup.LSH_BUCKET_CAP
 def near_duplicate_edge_pairs(
     edges: DataFrame,
     cosine_threshold: float = EDGE_COSINE_THRESHOLD,
-    endpoint_pair_cap: int | None = None,
-    with_tokens: bool = True,
 ) -> DataFrame:
-    """T4 candidate generation (ref utils/bulk_utils.py:416-510): pairs of
-    edges between the SAME directed endpoint pair (ref :446-450 skips any
-    candidate whose source or target differs) whose facts share a word (the
-    reference's "approximate BM25", :451-457) OR whose fact embeddings have
-    cosine >= 0.6 (:460-465).
+    """T4 candidate generation + T5 judgment (ref utils/bulk_utils.py:416-510):
+    pairs of edges between the SAME directed endpoint pair (ref :446-450
+    skips any candidate whose source or target differs) whose fact
+    embeddings have cosine >= 0.6 (:460-465). The reference's word-overlap
+    candidates (:451-457) are not generated: its duplicate judgment keeps
+    only pairs at cosine >= 0.6, so a token-only candidate never merges.
 
-    Output: a_uuid, b_uuid, same_tokens BOOLEAN, cos DOUBLE. The endpoint-
-    pair join key bounds the quadratic blowup exactly as the reference's
-    per-pair candidate loop does. `endpoint_pair_cap`: endpoint pairs with
-    more parallel (already exact-deduped) edges than the cap are skipped
-    outright — at web scale a hub pair with 10^6 distinct facts would
-    otherwise emit 10^12 candidate rows; skipping mirrors how
-    node_dedup.LSH_BUCKET_CAP makes blocking deliberately approximate
-    (exact-fact dedup has already run for those edges).
+    Output: a_uuid, b_uuid, cos DOUBLE. The endpoint-pair join key bounds
+    the quadratic blowup exactly as the reference's per-pair candidate loop
+    does. Endpoint pairs with more parallel (already exact-deduped) edges
+    than ENDPOINT_PAIR_CAP are skipped outright — at web scale a hub pair
+    with 10^6 distinct facts would otherwise emit 10^12 candidate rows;
+    skipping mirrors how node_dedup.LSH_BUCKET_CAP makes blocking
+    deliberately approximate (exact-fact dedup has already run for those
+    edges).
     """
     from graphiti_spark.search import _dot, quantize_col
 
     has_vec = "fact_embedding" in edges.columns
-    # fact rides along only when a consumer needs it: token arrays, or the
-    # embed-on-demand path below — the cosine-only caller with embeddings
-    # present (the pipeline's canonical map) never moves the string at all
-    need_fact = with_tokens or not has_vec
     # the directed endpoint-pair block key (group_id, source, target) is
     # ~90 B of uuid-hex strings; every downstream exchange keys on it, so it
     # travels as one xxhash64 instead. A 2^-64 block-key collision merges
-    # two endpoint blocks — extra CANDIDATES whose cosine/token judgment
-    # still decides, the same accepted-risk class as dedup_edges' fact_key.
+    # two endpoint blocks — extra CANDIDATES whose cosine judgment still
+    # decides, the same accepted-risk class as dedup_edges' fact_key.
     bk = F.xxhash64("group_id", "source_node_uuid", "target_node_uuid").alias("bk")
-    base = edges.select(
-        "uuid",
-        bk,
-        *(["fact"] if need_fact else []),
-        *(["fact_embedding"] if has_vec else []),
-    )
+    # fact rides along only for the embed-on-demand path below — with
+    # embeddings present (the pipeline's canonical map) the string never moves
+    base = edges.select("uuid", bk, "fact_embedding" if has_vec else "fact")
     # singleton endpoint pairs can never produce a candidate — drop them
     # BEFORE any per-edge feature work. In webtext the overwhelming
     # majority of endpoint pairs hold exactly one (already exact-deduped)
-    # edge, so this one aggregation shrinks the tokenize/quantize/embed
+    # edge, so this one aggregation shrinks the quantize/embed
     # work from |edges| to |edges in multi-edge blocks| (~13% on the 400k-
     # page corpus). The block list is tiny relative to the edge table, so
     # AQE turns this into a broadcast join (64 MB session threshold) and
     # the edge side is never shuffled.
     sizes = edges.groupBy(bk).count()
-    multi_blocks = sizes.filter(F.col("count") >= 2)
-    if endpoint_pair_cap is not None:
-        multi_blocks = multi_blocks.filter(F.col("count") <= endpoint_pair_cap)
+    multi_blocks = sizes.filter(F.col("count").between(2, ENDPOINT_PAIR_CAP))
     base = base.join(multi_blocks.drop("count"), on="bk")
     if has_vec:
         # quantize AFTER the block restriction: the 128-element transform is
@@ -192,35 +182,17 @@ def near_duplicate_edge_pairs(
         par = edges.sparkSession.sparkContext.defaultParallelism * 2
         base = base.repartition(par).withColumn(
             "qv", quantize_col(embed_udf(F.col("fact")))
-        )
-    # `with_tokens=False` callers (the cosine-only duplicate judgment in
-    # merge_near_duplicate_edges) skip the token arrays entirely — they are
-    # the widest per-row payload in the self-join shuffle
-    if with_tokens:
-        base = base.withColumn(
-            "toks",
-            F.array_distinct(
-                F.filter(F.split(F.lower(F.col("fact")), r"\s+"), lambda x: x != "")
-            ),
-        )
-    else:
-        base = base.withColumn("toks", F.lit(None).cast("array<string>"))
-    base = base.drop("fact")
+        ).drop("fact")
     # norms computed once per EDGE here, not once per PAIR below: the pair
     # join then evaluates a single integer dot per candidate instead of 3
     base = base.withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv")).cast("double")))
     a = base.select(
-        "bk",
-        F.col("uuid").alias("a_uuid"), F.col("toks").alias("a_toks"),
-        F.col("qv").alias("a_qv"), F.col("qn").alias("a_qn"),
+        "bk", F.col("uuid").alias("a_uuid"), F.col("qv").alias("a_qv"), F.col("qn").alias("a_qn")
     )
     b = base.select(
-        "bk",
-        F.col("uuid").alias("b_uuid"), F.col("toks").alias("b_toks"),
-        F.col("qv").alias("b_qv"), F.col("qn").alias("b_qn"),
+        "bk", F.col("uuid").alias("b_uuid"), F.col("qv").alias("b_qv"), F.col("qn").alias("b_qn")
     )
     pairs = a.join(b, on="bk").filter(F.col("a_uuid") < F.col("b_uuid"))
-    overlap = F.arrays_overlap("a_toks", "b_toks")
     # zero-norm guard: 0/0 would be NaN, and Spark SQL sorts NaN above every
     # number so `cos >= threshold` would be TRUE — the oracle twin
     # (_quantized_cosine) returns 0.0 for zero norms, so gate the expression
@@ -231,16 +203,10 @@ def near_duplicate_edge_pairs(
         _dot(F.col("a_qv"), F.col("b_qv")).cast("double")
         / (F.col("a_qn") * F.col("b_qn")),
     )
-    keep = (
-        (F.coalesce(overlap, F.lit(False)) | (F.col("cos") >= cosine_threshold))
-        if with_tokens
-        else (F.col("cos") >= cosine_threshold)
-    )
     return (
-        pairs.withColumn("same_tokens", overlap)
-        .withColumn("cos", cos)
-        .filter(keep)
-        .select("a_uuid", "b_uuid", "same_tokens", "cos")
+        pairs.withColumn("cos", cos)
+        .filter(F.col("cos") >= cosine_threshold)
+        .select("a_uuid", "b_uuid", "cos")
     )
 
 
@@ -259,12 +225,8 @@ def near_dup_canonical_map(
     computes it from the deduped table CONCURRENTLY with invalidation and
     applies it to the invalidated table afterwards.
     """
-    pairs = (
-        near_duplicate_edge_pairs(
-            edges, cosine_threshold, ENDPOINT_PAIR_CAP, with_tokens=False
-        )
-        .filter(F.col("cos") >= cosine_threshold)
-        .select(F.col("a_uuid").alias("a"), F.col("b_uuid").alias("b"))
+    pairs = near_duplicate_edge_pairs(edges, cosine_threshold).select(
+        F.col("a_uuid").alias("a"), F.col("b_uuid").alias("b")
     )
     canon = connected_components(pairs)
     members = F.collect_list(F.struct("created_at", "uuid", "episodes")).over(

@@ -93,14 +93,19 @@ def _resolve_mention(g: OracleGraph, group: str, name: str) -> str:
     return uid
 
 
-def ingest_episodes(episodes: list[dict], now: datetime) -> OracleGraph:
+def ingest_episodes(
+    episodes: list[dict], now: datetime, mention_fn=extract_mentions
+) -> OracleGraph:
     """episodes: [{uuid, group_id, content, valid_at}] — processed in
-    (group_id, valid_at, uuid) order like a chronological bulk load."""
+    (group_id, valid_at, uuid) order like a chronological bulk load.
+    `mention_fn` is the E1 extractor; pass
+    extraction.extract_mentions_with_reflexion to mirror
+    run_pipeline(reflexion=True)."""
     g = OracleGraph()
     for ep in sorted(episodes, key=lambda e: (e["group_id"], e["valid_at"], e["uuid"])):
         group = ep["group_id"]
         name_to_canon: dict[str, str] = {}
-        for m in extract_mentions(ep["content"]):
+        for m in mention_fn(ep["content"]):
             canon = _resolve_mention(g, group, m["name"])
             name_to_canon[m["name"]] = canon
             g.mentions.append((ep["uuid"], canon))

@@ -4,12 +4,15 @@ One Spark job reproduces the reference's 12-step bulk chain
 (/root/reference/graphiti_core/graphiti.py:584-870, traced in SURVEY.md
 §3.2) as declarative DataFrame stages:
 
-    web_pages ─ S3 ─> episodes ─ E1 ─> raw mentions ──> D1-D14 canonicalize
-                         │                                  │
-                         └─ E3 ─> raw triples ─ D15 ──> T1/T2 dedup
-                                                          │
+    web_pages ─ S3/E1/E3 ─┬─> raw mentions ──> D1-D14 canonicalize
+                          ├─> raw triples ─ D15 ──> T1/T2 dedup
+                          └─> episode text            │
                         T6/T7 invalidation ─> T5/T10 near-dup merge ─> edges
-    nodes + mentions + edges ─ S6 ─> materialized tables (+ manifests)
+    episodes + nodes + mentions + edges ─ S6 ─> materialized tables (+ manifests)
+
+S3, E1 and E3 are one mapInPandas (udfs.extract_all_map), so each page
+crosses into Python once; the episode row joins the page metadata to the
+text that map emitted, and writing it runs no Python.
 
 The chain is eight lineage.StageRunner stages — extraction,
 name_resolution, nodes_canonical / edges_dedup / mentions (concurrent),
@@ -30,7 +33,6 @@ from pyspark.sql import functions as F
 from graphiti_spark.functions.udfs import (
     embed_udf,
     extract_all_df,
-    html_to_text_udf,
     normalize_exact_col,
     split_extraction,
 )
@@ -52,9 +54,11 @@ from graphiti_spark.operators.node_dedup import (
 
 
 def pages_to_episodes(pages: DataFrame, group_col=None, lang: str | None = "en") -> DataFrame:
-    """S3: RawEpisode contract from web pages. Text comes from the html->text
-    UDF (byte-identical per url); the input text column, when present, is
-    only a cross-check. group_id defaults to the url host; source and
+    """S3: RawEpisode keys and metadata from web pages, JVM-only. The raw
+    `html` and `text` columns ride along (html null-typed when the input has
+    none); udfs.extract_all_df derives the content from them, html->text
+    (byte-identical per url) with the text column as the fallback for rows
+    without html. group_id defaults to the url host; source and
     source_description come from input columns of those names when present
     (per-episode overrides) and default to 'text' / 'web crawl'."""
     if group_col is None:
@@ -62,12 +66,7 @@ def pages_to_episodes(pages: DataFrame, group_col=None, lang: str | None = "en")
     df = pages
     if lang is not None and "lang" in pages.columns:
         df = df.filter(F.col("lang") == lang)
-    content = (
-        F.when(F.col("html").isNotNull(), html_to_text_udf(F.col("html")))
-        .otherwise(F.col("text"))
-        if "html" in df.columns
-        else F.col("text")
-    )
+    html = F.col("html") if "html" in df.columns else F.lit(None).cast("binary")
 
     def given(col: str, default: str):
         lit = F.lit(default)
@@ -81,7 +80,8 @@ def pages_to_episodes(pages: DataFrame, group_col=None, lang: str | None = "en")
         group_col.alias("group_id"),
         given("source", "text").alias("source"),
         given("source_description", "web crawl").alias("source_description"),
-        content.alias("content"),
+        html.alias("html"),
+        F.col("text"),
         F.col("warc_ts").alias("ep_valid_at"),
     )
 
@@ -144,35 +144,51 @@ def run_pipeline(
     # stage fingerprint (a durable checkpoint from the other mode must miss)
     in_fp = f"{in_files}:rfx{int(reflexion)}"
 
-    # episodes stay lazy: the fused extraction scans them exactly once, so
-    # there is nothing to share; callers materialize on demand
-    episodes = pages_to_episodes(pages, group_col, lang)
+    pages_meta = pages_to_episodes(pages, group_col, lang)
 
-    # one pass over the corpus produces mentions AND triples (kind-tagged),
-    # halving the Python/Arrow transfer of page content
+    # one pass over the corpus produces each page's text, mentions AND
+    # triples (kind-tagged): page content crosses into Python once
     # E2 reflexion (opt-in, ref node_operations.py:62-82 — default-off via
     # MAX_REFLEXION_ITERATIONS=0): adds the deterministic second-pass
     # mention family inside the same fused scan, zero extra jobs
     raw_all = runner.run(
-        "extraction", in_fp, lambda: extract_all_df(episodes, reflexion=reflexion)
+        "extraction", in_fp, lambda: extract_all_df(pages_meta, reflexion=reflexion)
     )
-    raw_mentions, raw_triples = split_extraction(raw_all)
+    raw_mentions, raw_triples, contents = split_extraction(raw_all)
     out = _resolve_and_assemble(
         runner, in_fp, raw_mentions, raw_triples, now,
         with_embeddings=with_embeddings, existing_nodes=existing_nodes,
         registry=registry,
     )
 
-    # episode.entity_edges: uuids of edges whose provenance includes the
-    # episode (ref graphiti.py:544-546) — lazy; computed if consumed. The
-    # frame is the store's episode row.
-    ep_edges = (
-        out["edges"]
-        .select(F.col("uuid").alias("edge_uuid"), F.explode("episodes").alias("episode_uuid"))
+    # The episode row: page metadata plus one aggregate per episode — its
+    # materialized text and entity_edges, the uuids of edges whose
+    # provenance includes it (ref graphiti.py:544-546). One aggregate keeps
+    # one row per uuid, so a (url, warc_ts) listed twice keeps one row per
+    # listing, and costs the write-out a single exchange. Lazy: computed
+    # if consumed.
+    no_str = F.lit(None).cast("string")
+    per_episode = (
+        contents.select("episode_uuid", "content", no_str.alias("edge_uuid"))
+        .unionByName(
+            out["edges"].select(
+                F.explode("episodes").alias("episode_uuid"),
+                no_str.alias("content"),
+                F.col("uuid").alias("edge_uuid"),
+            )
+        )
         .groupBy("episode_uuid")
-        .agg(F.sort_array(F.collect_list("edge_uuid")).alias("entity_edges"))
+        .agg(
+            F.min("content").alias("content"),
+            F.sort_array(F.collect_list("edge_uuid")).alias("entity_edges"),
+        )
     )
-    episodes_out = episodes.join(ep_edges, on="episode_uuid", how="left").select(
+    joined = pages_meta.join(per_episode, on="episode_uuid", how="left")
+    episodes = joined.select(
+        "episode_uuid", "name", "group_id", "source", "source_description",
+        "content", "ep_valid_at",
+    )
+    episodes_out = joined.select(
         F.col("episode_uuid").alias("uuid"),
         "name",
         "group_id",

@@ -146,13 +146,15 @@ RAW_MENTIONS = StructType(
     ]
 )
 
-# intermediate: fused single-pass extraction (kind = 'm' mention | 't' triple)
+# intermediate: fused single-pass extraction (kind = 'e' episode text |
+# 'm' mention | 't' triple)
 RAW_EXTRACTION = StructType(
     [
         StructField("kind", StringType(), False),
         StructField("episode_uuid", StringType(), False),
         StructField("group_id", StringType(), False),
         StructField("ep_valid_at", TimestampType(), False),
+        StructField("content", StringType(), True),
         StructField("name", StringType(), True),
         StructField("entity_type", StringType(), True),
         StructField("mention_idx", LongType(), True),

@@ -276,16 +276,30 @@ class ParquetStore:
     def delete_group(self, group_ids: list[str]) -> None:
         """clear_data(group_ids) across every store table. A partitioned
         table drops just those partitions (O(touched groups)); any other
-        table is rewritten without the groups' rows."""
+        table is rewritten without the groups' rows.
+
+        The "" and null groups are one group here: a partitioned table
+        stores both in __HIVE_DEFAULT_PARTITION__ and reads them back as
+        null, and the partition swap cannot address that directory by
+        value. Deleting either takes the full-table rewrite, as
+        merge_upsert does."""
+        blank = any(g in (None, "") for g in group_ids)
+        gone = F.col("group_id").isin([g for g in group_ids if g not in (None, "")])
+        if blank:
+            gone = gone | F.col("group_id").isNull() | (F.col("group_id") == "")
         for table in STORE_TABLES:
             if not self.exists(table):
                 continue
             df = self.read(table)
-            if self._is_partitioned(table):
+            partitioned = self._is_partitioned(table)
+            if partitioned and not blank:
                 self.overwrite_partitions(table, df.limit(0), group_ids)
             else:
-                keep = F.col("group_id").isNull() | ~F.col("group_id").isin(group_ids)
-                self.overwrite(table, df.filter(keep), partition_by=None)
+                self.overwrite(
+                    table,
+                    df.filter(~F.coalesce(gone, F.lit(False))),
+                    partition_by="group_id" if partitioned else None,
+                )
 
 
 # ---------------------------------------------------------------------------

@@ -47,13 +47,13 @@ def test_fuzzy_leg_fires_on_zero_pairs(spark, cache_registry):
     separator-anchored ids, 40 orgs x case variants, 12 zones) the LSH +
     Jaccard>=0.9 fuzzy pairing finds NOTHING — node canonicalization is
     pure exact dedup, which is what makes the oracle SQL-recomputable."""
-    from graphiti_spark.functions.udfs import extract_mentions_df
+    from graphiti_spark.functions.udfs import extract_all_df, split_extraction
     from graphiti_spark.operators.node_dedup import fuzzy_duplicate_pairs, name_keys
     from graphiti_spark.pipeline import pages_to_episodes
 
     pages = closed_form_pages(spark.read.parquet(f"{SF_BIG}/orders.parquet"))
     eps = pages_to_episodes(pages)
-    keys = name_keys(extract_mentions_df(eps))
+    keys = name_keys(split_extraction(extract_all_df(eps))[0])
     assert fuzzy_duplicate_pairs(keys, cache_registry).count() == 0
 
 

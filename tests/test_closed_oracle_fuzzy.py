@@ -50,13 +50,13 @@ def test_fuzzy_leg_fires_on_exactly_the_planted_classes(spark, cache_registry):
     canonical naming SQL-recomputable."""
     from itertools import combinations
 
-    from graphiti_spark.functions.udfs import extract_mentions_df
+    from graphiti_spark.functions.udfs import extract_all_df, split_extraction
     from graphiti_spark.operators.node_dedup import fuzzy_duplicate_pairs, name_keys
     from graphiti_spark.pipeline import pages_to_episodes
 
     pages = closed_form_pages_fuzzy(spark.read.parquet(f"{SF_BIG}/orders.parquet"))
     eps = pages_to_episodes(pages)
-    keys = name_keys(extract_mentions_df(eps)).persist()
+    keys = name_keys(split_extraction(extract_all_df(eps))[0]).persist()
     got = {(r.a, r.b) for r in fuzzy_duplicate_pairs(keys, cache_registry).collect()}
     assert got, "fuzzy leg must fire on a nonzero pair set"
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.datagen import generate_web_pages
 from graphiti_spark.oracle import ingest_episodes, precision_recall, triple_set
-from graphiti_spark.pipeline import pages_to_episodes, run_pipeline, spark_triple_set
+from graphiti_spark.pipeline import run_pipeline, spark_triple_set
 from graphiti_spark.schemas import WEB_PAGES
 
 NOW = datetime(2026, 8, 16, tzinfo=timezone.utc)
@@ -33,16 +33,29 @@ def result(spark, pages_df):
 
 
 def test_byte_identical_text(spark, pages_df):
-    """north_rule invariant: extracted text byte-identical to source text."""
-    eps = pages_to_episodes(pages_df, group_col=GROUP_COL(), lang=None).select(
-        F.col("name").alias("ep_url"), F.col("ep_valid_at").alias("ep_ts"), "content"
+    """north_rule invariant: the stored episode row's content is
+    byte-identical to the source text, both for pages with html (html->text
+    inside the extraction map) and for pages without (the text column)."""
+    mixed = pages_df.withColumn(
+        "html", F.when(F.hash("url") % 3 == 0, None).otherwise(F.col("html"))
     )
-    src = pages_df.select("url", "warc_ts", F.col("text").alias("orig"))
+    res = run_pipeline(
+        spark, mixed, group_col=GROUP_COL(), lang=None, now=NOW, with_embeddings=False
+    )
+    eps = res["episodes_with_edges"].select(
+        F.col("name").alias("ep_url"), F.col("valid_at").alias("ep_ts"), "content"
+    )
+    src = mixed.select(
+        "url", "warc_ts", F.col("html").isNull().alias("no_html"), F.col("text").alias("orig")
+    )
     joined = eps.join(
         src, on=[eps.ep_url == src.url, eps.ep_ts == src.warc_ts], how="inner"
-    )
+    ).persist()
     assert joined.count() == src.count()
-    assert joined.filter(F.col("content") != F.col("orig")).count() == 0
+    assert {r["no_html"] for r in joined.select("no_html").distinct().collect()} == {True, False}
+    assert joined.filter(~F.col("content").eqNullSafe(F.col("orig"))).count() == 0
+    joined.unpersist()
+    res["release"]()
 
 
 def test_pipeline_produces_graph(result):
@@ -245,6 +258,36 @@ def test_earliest_seen_spelling_names_the_node(spark):
     ]
     g = ingest_episodes(eps, NOW)
     assert det_id("node", host, "duff holdings") in g.nodes
+    assert {r["uuid"] for r in result["nodes"].collect()} == set(g.nodes)
+    assert {r["uuid"] for r in result["edges"].collect()} == {e.uuid for e in g.edges.values()}
+    assert spark_triple_set(result) == triple_set(g)
+    result["release"]()
+
+
+def test_reflexion_pipeline_matches_oracle(spark):
+    """run_pipeline(reflexion=True) against the oracle run with the same E2
+    extractor, over pages that name entities through a naming cue (half of
+    them html, half text-only): node uuids, edge uuids and the triple set
+    are equal."""
+    from graphiti_spark.extraction import extract_mentions_with_reflexion, render_html
+
+    cue_names = ["deep forge", "blue finch", "iron quay"]
+    rows = generate_web_pages(n_pages=120, seed=42)
+    for i, r in enumerate(rows[::3]):
+        r["text"] += f"\n\nA startup called {cue_names[i % 3]} opened nearby."
+        r["html"] = render_html(r["text"]) if i % 2 else None
+    pages = spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
+        schema=WEB_PAGES,
+    )
+    result = run_pipeline(spark, pages, now=NOW, with_embeddings=False, reflexion=True)
+    eps = [
+        {"uuid": r["episode_uuid"], "group_id": r["group_id"],
+         "content": r["content"], "valid_at": r["ep_valid_at"]}
+        for r in result["episodes"].collect()
+    ]
+    g = ingest_episodes(eps, NOW, mention_fn=extract_mentions_with_reflexion)
+    assert set(cue_names) <= {a for n in g.nodes.values() for a in n["aliases"]}
     assert {r["uuid"] for r in result["nodes"].collect()} == set(g.nodes)
     assert {r["uuid"] for r in result["edges"].collect()} == {e.uuid for e in g.edges.values()}
     assert spark_triple_set(result) == triple_set(g)

@@ -1,6 +1,7 @@
 """Physical-plan quality gates: predicate pushdown, column pruning and
 broadcast-join selection must survive refactors (the 100 TB posture)."""
 
+import re
 from datetime import datetime, timezone
 
 import pytest
@@ -30,6 +31,27 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _operators(df) -> list[str]:
+    """Node names of df's executed plan, through AQE wrappers and query
+    stages but not into cached stage outputs (an InMemoryTableScan is a
+    leaf: its cached plan already ran)."""
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        kids = node.children()
+        return [name] + [n for i in range(kids.size()) for n in walk(kids.apply(i))]
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _python_operators(df) -> list[str]:
+    return [n for n in _operators(df) if "Python" in n or "Pandas" in n or "InArrow" in n]
+
+
 def test_lang_filter_pushed_to_scan(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     eps = pages_to_episodes(pages, lang="en")
@@ -37,6 +59,25 @@ def test_lang_filter_pushed_to_scan(spark, pages_path):
     assert "PushedFilters" in plan and "lang" in plan.split("PushedFilters")[1][:200], (
         "lang filter must reach the parquet scan"
     )
+
+
+def test_one_python_crossing_per_page(spark, pages_path):
+    """html->text runs inside the fused extraction map: the extraction
+    stage's plan holds exactly one Python operator, and the stored episode
+    rows take their content from that stage's output, so writing them runs
+    no Python."""
+    from graphiti_spark.functions.udfs import extract_all_df
+
+    pages = spark.read.parquet(pages_path)
+    extraction = extract_all_df(pages_to_episodes(pages))
+    extraction.count()
+    assert _python_operators(extraction) == ["MapInPandas"]
+    assert "ArrowEvalPython" not in _plan(extraction)
+    res = run_pipeline(spark, pages, now=NOW, with_embeddings=False)
+    episodes = res["episodes_with_edges"]
+    assert episodes.count() == pages.filter(F.col("lang") == "en").count()
+    assert _python_operators(episodes) == []
+    res["release"]()
 
 
 def test_column_pruning_drops_html_when_text_only(spark, pages_path):
@@ -49,10 +90,10 @@ def test_column_pruning_drops_html_when_text_only(spark, pages_path):
 
 
 def _fuzzy_band_pairs(pages, cache_registry):
-    from graphiti_spark.functions.udfs import extract_mentions_df
+    from graphiti_spark.functions.udfs import extract_all_df, split_extraction
     from graphiti_spark.operators.node_dedup import fuzzy_duplicate_pairs, name_keys
 
-    keys = name_keys(extract_mentions_df(pages_to_episodes(pages)))
+    keys = name_keys(split_extraction(extract_all_df(pages_to_episodes(pages)))[0])
     return fuzzy_duplicate_pairs(keys, cache_registry)
 
 
@@ -140,8 +181,8 @@ def test_no_cartesian_in_pipeline_outputs(spark, pages_path):
 
 def test_merge_pair_join_is_equijoin_no_cartesian(spark):
     """T4/T5: the near-dup candidate join must hash/sort-merge on the
-    endpoint-pair key, never a cartesian, and the token/vector payloads
-    must not appear in the join condition."""
+    endpoint-pair key alone, never a cartesian; the vector payload is no
+    join key."""
     from graphiti_spark.extraction import embed_text
     from graphiti_spark.operators.edge_ops import near_duplicate_edge_pairs
 
@@ -152,8 +193,9 @@ def test_merge_pair_join_is_equijoin_no_cartesian(spark):
         "target_node_uuid string, fact string, fact_embedding array<float>",
     )
     plan = _plan(near_duplicate_edge_pairs(edges))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan or "ShuffledHashJoin" in plan
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert joins and all(re.search(r"Join \[bk#\d+L\], \[bk#\d+L\],", j) for j in joins), joins
 
 
 def test_prefix_filter_join_is_equijoin_no_cartesian(spark):
@@ -223,3 +265,38 @@ def test_invalidation_map_job_fence(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 5, jobs
+
+
+# jobs issued by one run_pipeline call on generate_web_pages(n_pages=8,
+# seed=42), measured on a 4-core host; see test_pipeline_job_fence
+PIPELINE_JOBS = 51
+
+
+def test_pipeline_job_fence(spark):
+    """A warm run_pipeline call on a fixed 8-page input issues at most
+    PIPELINE_JOBS + 2 Spark jobs. Its job is to catch a new probe collect,
+    count or cache in any stage. The second of two runs is counted, so the
+    first run's one-off session work is not; jobs from the stages' worker
+    threads carry no job group, so the count takes every new id in the
+    fence's group or in none."""
+    rows = generate_web_pages(n_pages=8, seed=42)
+    pages = spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
+        schema=WEB_PAGES,
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "pipeline_job_fence"
+
+    def ids():
+        return set(tracker.getJobIdsForGroup(group)) | set(tracker.getJobIdsForGroup(None))
+
+    sc.setJobGroup(group, "run_pipeline job fence")
+    try:
+        run_pipeline(spark, pages, now=NOW)["release"]()
+        before = ids()
+        run_pipeline(spark, pages, now=NOW)["release"]()
+        jobs = ids() - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= PIPELINE_JOBS + 2, len(jobs)

@@ -106,7 +106,7 @@ def test_near_duplicate_edge_pairs(spark):
 
     rows = [
         ("e1", "g", "n1", "n2", "alice works at acme corp", embed_text("alice works at acme corp")),
-        ("e2", "g", "n1", "n2", "alice is employed by acme corp", embed_text("alice is employed by acme corp")),
+        ("e2", "g", "n1", "n2", "alice is working at acme corp", embed_text("alice is working at acme corp")),
         ("e3", "g", "n1", "n2", "completely unrelated zq xv yw", embed_text("qq zz vv ww")),
         ("e4", "g", "n1", "n3", "alice works at acme corp", embed_text("alice works at acme corp")),
         ("e5", "g", "n2", "n1", "alice works at acme corp", embed_text("alice works at acme corp")),
@@ -117,8 +117,8 @@ def test_near_duplicate_edge_pairs(spark):
         "target_node_uuid string, fact string, fact_embedding array<float>",
     )
     got = {(r["a_uuid"], r["b_uuid"]) for r in near_duplicate_edge_pairs(edges).collect()}
-    assert ("e1", "e2") in got          # same endpoints, word overlap
-    assert ("e1", "e3") not in got      # same endpoints, no overlap, low cosine
+    assert ("e1", "e2") in got          # same endpoints, paraphrase: cosine >= 0.6
+    assert ("e1", "e3") not in got      # same endpoints, low cosine
     assert not any("e4" in p for p in got)  # different endpoint pair
     # reference requires the SAME DIRECTED endpoints (bulk_utils.py:446-450)
     assert not any("e5" in p for p in got)
@@ -178,7 +178,7 @@ def test_zero_norm_embeddings_never_match(spark):
         schema="uuid string, group_id string, source_node_uuid string, "
         "target_node_uuid string, fact string, fact_embedding array<float>",
     )
-    got = near_duplicate_edge_pairs(edges, with_tokens=False).collect()
+    got = near_duplicate_edge_pairs(edges).collect()
     assert got == []
 
 

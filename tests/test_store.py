@@ -82,6 +82,35 @@ def test_delete_group_covers_every_store_table(spark, tmp_path):
     assert store.read("community_members").filter("group_id is null").count() == 1
 
 
+def test_delete_group_blank_group_from_every_table(spark, tmp_path):
+    """add_episode's default group is "", which a partitioned table stores
+    in __HIVE_DEFAULT_PARTITION__ and reads back as null. delete_group([""])
+    removes that group's rows from every table and keeps the other
+    groups'."""
+    from graphiti_spark.graphiti import GraphitiSpark
+    from graphiti_spark.schemas import STORE_TABLES
+
+    g = GraphitiSpark(spark, str(tmp_path / "graph"))
+    body = "Alice Smith works at Initech Corp. Bob Jones met Alice Smith."
+    # the first row carries no group_id, as add_episode's default leaves it
+    g.add_episode_bulk([
+        {"url": "https://a.example/1", "warc_ts": ts(1), "text": body},
+        {"url": "https://b.example/1", "warc_ts": ts(2), "text": body, "group_id": "kept"},
+    ])
+    tables = [t for t in STORE_TABLES if g.store.exists(t)]
+    assert {"episodes", "nodes", "edges", "mentions"} <= set(tables)
+
+    def groups(t):
+        return {r["group_id"] for r in g.store.read(t).select("group_id").collect()}
+
+    assert all(None in groups(t) for t in ("episodes", "nodes", "edges", "mentions"))
+    g.store.delete_group([""])
+    for t in tables:
+        assert not groups(t) & {None, ""}, t
+    for t in ("episodes", "nodes", "edges", "mentions"):
+        assert groups(t) == {"kept"}, t
+
+
 def test_delete_group_failed_root_rename_loses_nothing(spark, tmp_path, monkeypatch):
     """A rename onto a table's root directory that fails mid-delete (a
     crash between the swap's renames) leaves each table readable as
